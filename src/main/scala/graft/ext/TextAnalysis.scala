@@ -747,8 +747,11 @@ object TextAnalysis {
     *    lists (one full embedded-corpus pass), re-run by t28/t30/t31;
     *  - [[rrfExactSlateMemo]]: the exact fusion slate, re-run by
     *    t30/t31.
-    * All localCheckpoint'd (the ed2 storage lesson); every consumer
-    * join broadcasts the probe-sized side, so no layout is lost. The
+    * All localCheckpoint'd (the ed2 storage lesson). The checkpoint
+    * drops the frames' layout, which costs little here: the scoring
+    * consumers broadcast the probe-sized side, and [[rrfFuseRanks]]'s
+    * full-outer join (which cannot broadcast) exchanges two tiny
+    * frames of at most rank-depth rows per probe. The
     * serving twins keep the generic probe-frame entry points — a
     * micro-batch's probes are not the session constant. */
   private[graft] def probeScoredMemo(s: SparkSession, d: String): DataFrame =

@@ -8,11 +8,13 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.internal.Logging
+import org.apache.spark.sql.{Column, DataFrame, GraftShims}
 import org.apache.spark.sql.functions._
 
 import graft.core.{EngineConfig, Envelope}
 import graft.functions.ToUpperCamelCase
+import graft.streaming.KafkaBridge
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One emitted batch: every message of one `emit` call for one topic —
@@ -31,14 +33,26 @@ final case class EmittedBatch(topic: String, values: Seq[String])
   *    element.
   *  - **Validation** (O22): analysis-time failures before any job runs —
   *    reserved `code` column, blank eventName.
-  *  - **Kafka sink** (O2) + **multi-cluster replication** (O3): one write
-  *    per host over a persisted batch. At scale the batch is computed once
-  *    (`persist`) and the Kafka connector pools producers per executor —
-  *    the reference's hand-rolled connection pool + TTL (O17) is
-  *    engine-managed (`spark.kafka.producer.cache.timeout`).
-  *  - **In-memory test sink** (O15): `onlyTesting` captures enriched JSON
-  *    driver-side for assertions; `getParsedEmittedEvents` can replicate
-  *    the reference's per-batch `.reverse()` quirk behind
+  *  - **Emit scope** (one job per flush): [[scoped]] defers every emit
+  *    of the calling thread — enriched and validated eagerly, so analysis
+  *    errors still surface at the call — and flushes them at the end as
+  *    ONE `union` of slot-tagged `(slot, topic, value)` frames. The router
+  *    scopes each micro-batch, so all its routes' emits and its DLQ run as
+  *    one Spark job instead of one job per call; an emit outside any
+  *    scope is simply a one-slot flush.
+  *  - **Kafka sink** (O2) + **multi-cluster replication** (O3): a flush
+  *    writes its union once per host, each row to its own `topic` column
+  *    (the sink options set no `topic`). With more than one host the union
+  *    is computed once (`persist`); the Kafka connector pools producers
+  *    per executor — the reference's hand-rolled connection pool + TTL
+  *    (O17) is engine-managed (`spark.kafka.producer.cache.timeout`).
+  *    Rows of different emits in one flush are written by concurrent
+  *    tasks, so Kafka order holds within an emit, not across the emits of
+  *    one flush.
+  *  - **In-memory test sink** (O15): `onlyTesting` collects the union
+  *    once and splits it back per slot, in call order, so each emit still
+  *    captures its own [[EmittedBatch]]; `getParsedEmittedEvents` can
+  *    replicate the reference's per-batch `.reverse()` quirk behind
   *    `parsedEventsReverseCompat`.
   *
   * The clock is injectable (the reference's tests freeze time with
@@ -46,11 +60,15 @@ final case class EmittedBatch(topic: String, values: Seq[String])
   */
 final class Emitter(
     val config: EngineConfig,
-    clock: () => Instant = Emitter.WallClock) {
+    clock: () => Instant = Emitter.WallClock)
+  extends Logging {
 
   import Emitter._
 
   private val captured = mutable.ArrayBuffer.empty[EmittedBatch]
+  /** The calling thread's open scope: its deferred emits in call order,
+    * or null outside [[scoped]]. */
+  private val open = new ThreadLocal[mutable.ArrayBuffer[Slot]]
 
   // ---------------------------------------------------------------- enrich
 
@@ -123,34 +141,25 @@ final class Emitter(
     * validation is not reproducible here because a DataFrame's row count
     * is unknown until the job runs — documented deviation.
     *
+    * Inside a [[scoped]] block the frame is enriched and validated here
+    * but written when the scope flushes.
+    *
     * Returns `Unit`, not per-record acks: the reference resolves each send
     * to `RecordMetadata[][]` (one array per host,
     * producer/legacy-producer.ts:196-209, resolved at 199-206). Spark's
-    * Kafka sink acks at job granularity — `save()` returning IS the
-    * all-partitions-acked signal; per-record topic/partition/offset
+    * Kafka sink acks at job granularity — the flush's `save()` returning
+    * IS the all-partitions-acked signal; per-record topic/partition/offset
     * metadata never reaches the driver (and collecting it for billions of
     * rows would be an anti-pattern). Callers who branched on RecordMetadata
-    * in the reference should branch on emit's success/exception instead —
-    * documented deviation (SURVEY.md §7.4.8). */
+    * in the reference should branch on the flush's success/exception
+    * instead — documented deviation (SURVEY.md §7.4.8). */
   def emit(
       df: DataFrame,
       topic: String,
       eventName: Option[String] = None,
-      overwriteHosts: Option[Seq[String]] = None): Unit = {
-    val enriched = enrich(df, topic, eventName)
-    if (config.onlyTesting) {
-      val values = enriched.select("value").collect().map(_.getString(0)).toSeq
-      if (values.nonEmpty) synchronized { captured += EmittedBatch(topic, values) }
-    } else {
-      val hosts = resolveHosts(overwriteHosts)
-      // Multi-cluster replication (O3): compute once, write per host.
-      // Exactly-once across clusters is impossible; like the reference these
-      // are independent at-least-once sends (SURVEY.md §7.4.7).
-      enriched.persist()
-      try hosts.foreach(writeKafkaBatch(enriched, topic, _))
-      finally enriched.unpersist()
-    }
-  }
+      overwriteHosts: Option[Seq[String]] = None): Unit =
+    record(Slot(topic, resolveHosts(overwriteHosts),
+      Some(enrich(df, topic, eventName).select("value")), Nil))
 
   /** Driver-side convenience emit of literal JSON documents — the analog of
     * the reference's `emit({topic, data})` with plain objects. Object key
@@ -179,9 +188,9 @@ final class Emitter(
       node.put(Envelope.CodeField, code)
       mapper.writeValueAsString(node)
     }
-    if (config.onlyTesting) synchronized { captured += EmittedBatch(topic, values) }
-    else throw new IllegalStateException(
+    if (!config.onlyTesting) throw new IllegalStateException(
       "emitJson outside onlyTesting requires a Kafka cluster; use emit(df, ...)")
+    record(Slot(topic, Nil, None, values))
   }
 
   /** Streaming emit: enrich + Kafka sink for every configured host via
@@ -197,15 +206,7 @@ final class Emitter(
     val hosts = resolveHosts(None)
     val writer = enriched.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (config.onlyTesting) {
-          val values = batch.select("value").collect().map(_.getString(0)).toSeq
-          if (values.nonEmpty) synchronized { captured += EmittedBatch(topic, values) }
-        } else {
-          batch.persist()
-          try hosts.foreach(writeKafkaBatch(batch, topic, _))
-          finally batch.unpersist()
-        }
-        ()
+        write(Seq(Slot(topic, hosts, Some(batch.select("value")), Nil)))
       }
     checkpoint.orElse(config.checkpointLocation)
       .foreach(writer.option("checkpointLocation", _))
@@ -214,28 +215,73 @@ final class Emitter(
 
   /** Raw passthrough emit (no envelope, no validation) — dead-letter
     * routing of unparseable message values. */
-  private[graft] def emitRaw(df: DataFrame, topic: String): Unit = {
-    val values = df.select(col("value").cast("string").as("value"))
+  private[graft] def emitRaw(df: DataFrame, topic: String): Unit =
+    record(Slot(topic, resolveHosts(None),
+      Some(df.select(col("value").cast("string").as("value"))), Nil))
+
+  // ----------------------------------------------------------------- scope
+
+  /** Run `body` with every emit of the calling thread deferred, then flush
+    * them all at once: one Spark job in `onlyTesting` mode, one write per
+    * host set otherwise. Deferred emits keep their call order, batch
+    * boundaries and value order. If `body` throws, nothing is flushed.
+    * With `isolate`, a flush that fails re-flushes each emit on its own
+    * and logs the ones that fail, so one bad frame loses only its own
+    * rows (the router's LogAndContinue). A nested scope joins the open
+    * one. */
+  private[graft] def scoped(isolate: Boolean)(body: => Unit): Unit =
+    if (open.get != null) body
+    else {
+      val slots = mutable.ArrayBuffer.empty[Slot]
+      open.set(slots)
+      try body finally open.remove()
+      flush(slots.toSeq, isolate)
+    }
+
+  private def record(slot: Slot): Unit = open.get match {
+    case null => flush(Seq(slot), isolate = false)
+    case slots => slots += slot
+  }
+
+  private def flush(slots: Seq[Slot], isolate: Boolean): Unit =
+    if (!isolate) write(slots)
+    else try write(slots) catch {
+      case _: Exception if slots.size > 1 => slots.foreach(s => flush(Seq(s), isolate))
+      case e: Exception => logError(s"Emit to ${slots.head.topic} failed", e)
+    }
+
+  /** Tag each slot's frame with its index and run the union of all of them
+    * as one job (one write per host set outside `onlyTesting`). Capture
+    * splits the collected rows back per slot: a union keeps each child's
+    * rows in their own order. */
+  private def write(slots: Seq[Slot]): Unit = {
+    val tagged = slots.zipWithIndex.flatMap { case (s, i) =>
+      s.frame.map(f => s -> f.select(lit(i).as("slot"), lit(s.topic).as("topic"), col("value")))
+    }
     if (config.onlyTesting) {
-      val vs = values.collect().map(_.getString(0)).toSeq
-      if (vs.nonEmpty) synchronized { captured += EmittedBatch(topic, vs) }
-    } else {
-      val withTopic = values.select(col("value"), lit(topic).as("topic")).persist()
-      try resolveHosts(None).foreach(writeKafkaBatch(withTopic, topic, _))
-      finally withTopic.unpersist()
+      val rows =
+        if (tagged.isEmpty) Map.empty[Int, Seq[String]]
+        else GraftShims.union(tagged.map(_._2)).collect().toSeq
+          .groupMap(_.getInt(0))(_.getString(2))
+      val batches = slots.zipWithIndex.flatMap { case (s, i) =>
+        val values = if (s.frame.isEmpty) s.docs else rows.getOrElse(i, Nil)
+        if (values.isEmpty) None else Some(EmittedBatch(s.topic, values))
+      }
+      synchronized { captured ++= batches }
+    } else tagged.map(_._1.hosts).distinct.foreach { hosts =>
+      val union = GraftShims.union(tagged.filter(_._1.hosts == hosts).map(_._2))
+        .select("value", "topic")
+      // Multi-cluster replication (O3): compute once, write per host.
+      // Exactly-once across clusters is impossible; like the reference these
+      // are independent at-least-once sends (SURVEY.md §7.4.7).
+      if (hosts.size > 1) union.persist()
+      try hosts.foreach(KafkaBridge.sink(union, config, _))
+      finally if (hosts.size > 1) union.unpersist()
     }
   }
 
   private def resolveHosts(overwrite: Option[Seq[String]]): Seq[String] =
     overwrite.filter(_.nonEmpty).getOrElse(config.host +: config.additionalHosts)
-
-  private def writeKafkaBatch(enriched: DataFrame, topic: String, host: String): Unit =
-    enriched.selectExpr("CAST(value AS STRING) AS value", "topic")
-      .write.format("kafka")
-      // single source of truth for the O18 producer passthrough (compression,
-      // idempotence, retries, partitioner class) — contract-tested there
-      .options(graft.streaming.KafkaBridge.sinkOptions(config, host))
-      .save()
 
   private def validate(df: DataFrame, topic: String, eventName: Option[String]): Unit = {
     require(topic.trim.nonEmpty, "The topic attribute cannot be an empty string")
@@ -269,6 +315,11 @@ object Emitter {
     * decide between a per-batch `current_timestamp()` expression (wall
     * clock) and a frozen literal (injected test clock). */
   val WallClock: () => Instant = () => Instant.now()
+
+  /** One deferred emit: its topic and hosts, and either its `value` frame
+    * or, for [[Emitter.emitJson]], its literal documents. */
+  private final case class Slot(
+      topic: String, hosts: Seq[String], frame: Option[DataFrame], docs: Seq[String])
 
   private val mapper = new ObjectMapper()
 

@@ -37,6 +37,12 @@ final case class Route(
   * Scale notes:
   *  - One micro-batch is parsed once and `persist()`ed; N route branches
   *    filter it without re-reading Kafka. Multicast without N consumers.
+  *  - One Spark job per micro-batch: the batch runs in one
+  *    [[Emitter.scoped]] block, so handlers' emits and the DLQ only plan
+  *    their frames, and the scope flushes every route's output as one
+  *    union when dispatch ends. The per-batch cost is one job however
+  *    many routes are registered (jobs the handlers run themselves, such
+  *    as a `count()`, come on top).
   *  - Route predicates are codegen'd; the reference's O(routes)
   *    interpreted linear scan per message becomes a vectorized filter.
   *  - Source pruning (O11): only routed topics are subscribed.
@@ -162,7 +168,8 @@ final class RouteRegistry(
 
   /** Dispatch one parsed batch through every matching route. Handler errors
     * follow the configured [[ErrorPolicy]] — the reference swallows + logs
-    * (LogAndContinue); FailFast lets the micro-batch retry. */
+    * (LogAndContinue); FailFast lets the micro-batch retry. Outside
+    * [[process]]'s scope each emit is written when it is called. */
   def dispatch(parsed: DataFrame): Unit = {
     val current = synchronized(routes.toSeq)
     current.foreach { r =>
@@ -181,16 +188,24 @@ final class RouteRegistry(
     if (config.strategy == Strategy.OneByOne) processOneByOne(envelopes)
     else {
       val all = parseAll(envelopes).persist()
-      try {
-        dispatch(all.filter(col(Corrupt).isNull).drop(Corrupt))
-        // DLQ extension: malformed values are emitted raw for replay
-        // (reference parity = silent skip; both commit the offset).
-        config.dlqTopic.foreach { t =>
-          emitter.emitRaw(all.filter(col(Corrupt).isNotNull).select(col("value")), t)
-        }
-      } finally { all.unpersist(); () }
+      try route(all)
+      finally { all.unpersist(); () }
     }
   }
+
+  /** Dispatch and DLQ for one parsed batch in one emit scope, flushed as
+    * one Spark job. Under LogAndContinue a flush that fails at run time
+    * re-flushes each emit on its own and logs the failures — the output
+    * of a per-route try/catch; FailFast rethrows and flushes nothing. */
+  private def route(all: DataFrame): Unit =
+    emitter.scoped(isolate = config.errorPolicy == ErrorPolicy.LogAndContinue) {
+      dispatch(all.filter(col(Corrupt).isNull).drop(Corrupt))
+      // DLQ extension: malformed values are emitted raw for replay
+      // (reference parity = silent skip; both commit the offset).
+      config.dlqTopic.foreach { t =>
+        emitter.emitRaw(all.filter(col(Corrupt).isNotNull).select(col("value")), t)
+      }
+    }
 
   /** Strict serial parity mode (O13): every message individually, in order.
     * Driver-side by construction — the reference only achieves global order
@@ -200,13 +215,7 @@ final class RouteRegistry(
     import spark.implicits._
     envelopes.select(col("topic").cast("string"), col("value").cast("string"))
       .as[(String, String)].collect()
-      .foreach { case (t, v) =>
-        val one = parseAll(Seq((t, v)).toDF("topic", "value"))
-        dispatch(one.filter(col(Corrupt).isNull).drop(Corrupt))
-        config.dlqTopic.foreach { dlq =>
-          emitter.emitRaw(one.filter(col(Corrupt).isNotNull).select(col("value")), dlq)
-        }
-      }
+      .foreach { case (t, v) => route(parseAll(Seq((t, v)).toDF("topic", "value"))) }
   }
 
   /** Start routing a streaming envelope source `(topic, value)` — one

@@ -419,15 +419,19 @@ class PlanShapeSpec extends SparkSuite {
     // discipline is pinned on the build itself (the bpeRound5Build
     // precedent)
     val docs = graft.core.Tables.documents(spark, sf)
-    val p = graft.ext.TextAnalysis.bm25ImpactsFromTf(
-      graft.ext.TextAnalysis.bm25Tf(spark, docs),
-      graft.ext.TextAnalysis.bitLenIdf).queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(p.contains("word_counts"),
-      "postings must come from the doc-local codegen'd wordcount, not a groupBy exchange")
-    assert(p.contains("BroadcastHashJoin"), "df lookup must broadcast")
-    assert(!p.contains("SortMergeJoin"), "no posting-side sort-merge join")
-    assert(!p.contains("CartesianProduct"))
+    // bm25Tf persists its frame: release it so the entry cannot
+    // plan-alias into later tests' cache censuses
+    val tf = graft.ext.TextAnalysis.bm25Tf(spark, docs)
+    try {
+      val p = graft.ext.TextAnalysis.bm25ImpactsFromTf(
+        tf, graft.ext.TextAnalysis.bitLenIdf).queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      assert(p.contains("word_counts"),
+        "postings must come from the doc-local codegen'd wordcount, not a groupBy exchange")
+      assert(p.contains("BroadcastHashJoin"), "df lookup must broadcast")
+      assert(!p.contains("SortMergeJoin"), "no posting-side sort-merge join")
+      assert(!p.contains("CartesianProduct"))
+    } finally { tf.unpersist(false); () }
   }
 
   test("t26: candidates broadcast into the embeddings scan — the corpus side never sort-merge-joins") {

@@ -2,12 +2,14 @@ package graft.route
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftShims}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSuite
-import graft.core.{EngineConfig, ErrorPolicy, EventSchemaRegistry}
-import graft.produce.Emitter
+import graft.core.{EngineConfig, ErrorPolicy, EventSchemaRegistry, Strategy}
+import graft.produce.{EmittedBatch, Emitter}
 import graft.testkit.TestHarness
 
 /** Routing semantics, mirroring the reference's consumer suite and the
@@ -213,5 +215,141 @@ class RouteRegistrySpec extends SparkSuite {
     assert(aSawK.contains(7L), "well-typed message keeps its parsed payload")
     assert(h.emitter.getEmittedEvents.forall(_.topic != "dlq"),
       "schema conflicts are not DLQ material - only unparseable JSON is")
+  }
+
+  // ------------------------------------------------- one job per batch
+
+  /** Envelopes over four topics: every route of [[oneJobRoutes]] gets rows
+    * except the `t-b`/`other` and `t-e` ones, and two values are
+    * malformed for the DLQ. */
+  private val mixed: Seq[(String, String)] = Seq(
+    ("t-a", """{"n":1,"code":"Created"}"""),
+    ("t-b", """{"n":2,"code":"Moved"}"""),
+    ("t-a", """{"n":3,"code":"Deleted"}"""),
+    ("t-c", "not json"),
+    ("t-c", """{"n":4}"""),
+    ("t-a", """{"n":5,"code":"Created"}"""),
+    ("t-b", """{"n":6}"""),
+    ("t-d", """{"n":7,"code":"Any"}"""),
+    ("t-a", """{"n":8"""))
+
+  private def reemit(idx: Int): (DataFrame, Emitter) => Unit =
+    (df, em) => em.emit(df.select(col("n"), lit(idx).as("route")), s"out-$idx")
+
+  /** Eight pure-transform routes in registration order: code-specific,
+    * global, two with an empty branch, and one that calls `emitJson`
+    * between two `emit`s. */
+  private val oneJobRoutes: Seq[Route] = Seq(
+    Route("t-a", Some("Created"), reemit(1)),
+    Route("t-a", None, reemit(2)),
+    Route("t-b", Some("Moved"), reemit(3)),
+    Route("t-b", Some("Other"), reemit(4)),
+    Route("t-c", None, reemit(5)),
+    Route("t-d", None, reemit(6)),
+    Route("t-e", None, reemit(7)),
+    Route("t-b", None, (df, em) => {
+      em.emit(df.select(col("n")), "out-8a")
+      em.emitJson("out-8j", Seq("""{"k":1}"""))
+      em.emit(df.select((col("n") * 10).as("n")), "out-8b")
+    }))
+
+  private def oneJobConfig(policy: ErrorPolicy = ErrorPolicy.LogAndContinue) =
+    EngineConfig(appName = Some("one-job"), dlqTopic = Some("dlq"), errorPolicy = policy)
+
+  private def registry(config: EngineConfig, routes: Seq[Route]): RouteRegistry = {
+    val schemas = new EventSchemaRegistry()
+      .register("Created", StructType(Seq(StructField("n", LongType))))
+    val r = new RouteRegistry(config.copy(onlyTesting = true),
+      new Emitter(config.copy(onlyTesting = true), fixedClock("2022-12-08T00:00:00Z")), schemas)
+    routes.foreach(r.add)
+    r
+  }
+
+  /** The per-route sequence: each handler on its own branch, in
+    * registration order, with a second emitter outside any scope (every
+    * emit written when called), each handler under its own try/catch, then
+    * the batch's malformed values as one DLQ batch. */
+  private def perRoute(reg: RouteRegistry, routes: Seq[Route], batch: Seq[(String, String)]): Seq[EmittedBatch] = {
+    import spark.implicits._
+    val ref = new Emitter(reg.emitter.config, fixedClock("2022-12-08T00:00:00Z"))
+    val parsed = reg.parse(batch.toDF("topic", "value"))
+    routes.foreach { r =>
+      try r.handler(parsed.filter(reg.predicate(r)).drop("topic", "value"), ref)
+      catch { case _: Exception => () }
+    }
+    val malformed = batch.map(_._2).filter(v => !v.startsWith("{") || !v.endsWith("}"))
+    ref.getEmittedEvents ++ (if (malformed.isEmpty) Nil else Seq(EmittedBatch("dlq", malformed)))
+  }
+
+  test("one Spark job per batch: every route's emits and the DLQ flush as one union") {
+    import spark.implicits._
+    val reg = registry(oneJobConfig(), oneJobRoutes)
+    assert(reg.routeCount >= 6)
+    val batch = mixed.toDF("topic", "value")
+    val group = "route-one-job"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one routed batch")
+      try reg.process(batch) finally sc.clearJobGroup()
+      GraftShims.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 1, s"${reg.routeCount} routes + DLQ ran ${jobs.get} jobs")
+    assert(reg.emitter.getEmittedEvents.nonEmpty)
+  }
+
+  test("one-job flush keeps the per-route emit sequence: topics, batch boundaries, value order") {
+    import spark.implicits._
+    val reg = registry(oneJobConfig(), oneJobRoutes)
+    reg.process(mixed.toDF("topic", "value"))
+    val got = reg.emitter.getEmittedEvents
+    assert(got == perRoute(reg, oneJobRoutes, mixed))
+    // empty branches (routes 4 and 7) capture nothing; emitJson keeps its
+    // place between route 8's two emits
+    assert(got.map(_.topic) ==
+      Seq("out-1", "out-2", "out-3", "out-5", "out-6", "out-8a", "out-8j", "out-8b", "dlq"))
+    assert(got.head.values.map(v => v.take(v.indexOf(','))) == Seq("""{"n":1""", """{"n":5"""))
+    assert(got.last.values == Seq("not json", """{"n":8"""))
+  }
+
+  test("one-by-one strategy keeps the per-message, per-route emit sequence") {
+    import spark.implicits._
+    val reg = registry(oneJobConfig().copy(strategy = Strategy.OneByOne), oneJobRoutes)
+    reg.process(mixed.toDF("topic", "value"))
+    val want = mixed.flatMap(m => perRoute(reg, oneJobRoutes, Seq(m)))
+    assert(reg.emitter.getEmittedEvents == want)
+    assert(want.count(_.topic == "dlq") == 2)
+  }
+
+  test("a route whose frame fails at run time: LogAndContinue keeps the rest, FailFast throws, no cache leak") {
+    import spark.implicits._
+    // route 2's frame fails only when a job evaluates row n = 5
+    val failing = oneJobRoutes.updated(1, Route("t-a", None, (df, em) => em.emit(
+      df.select(coalesce(when(col("n") === 5, raise_error(lit("bad row"))), col("n")).as("n")),
+      "out-2")))
+    val batch = mixed.toDF("topic", "value")
+    val sc = spark.sparkContext
+
+    val lenient = registry(oneJobConfig(), failing)
+    lenient.process(batch)
+    val before = sc.getPersistentRDDs.size
+    (1 to 3).foreach(_ => lenient.process(batch))
+    assert(sc.getPersistentRDDs.size <= before, "persisted RDDs grew over repeated batches")
+    val want = perRoute(lenient, failing, mixed)
+    assert(!want.exists(_.topic == "out-2"))
+    assert(lenient.emitter.getEmittedEvents == Seq.fill(4)(want).flatten)
+
+    val strict = registry(oneJobConfig(ErrorPolicy.FailFast), failing)
+    intercept[Exception] { strict.process(batch) }
+    val before2 = sc.getPersistentRDDs.size
+    (1 to 3).foreach(_ => intercept[Exception] { strict.process(batch) })
+    assert(sc.getPersistentRDDs.size <= before2, "persisted RDDs grew over repeated failing batches")
+    assert(strict.emitter.getEmittedEvents.isEmpty)
   }
 }
