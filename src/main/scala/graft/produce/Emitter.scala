@@ -9,7 +9,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{Column, DataFrame, GraftShims}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.core.{EngineConfig, Envelope}
@@ -48,7 +48,9 @@ final case class EmittedBatch(topic: String, values: Seq[String])
   *    (O17) is engine-managed (`spark.kafka.producer.cache.timeout`).
   *    Rows of different emits in one flush are written by concurrent
   *    tasks, so Kafka order holds within an emit, not across the emits of
-  *    one flush.
+  *    one flush. A failed write under isolation is retried emit by emit
+  *    against that host only; rows of the failed job's tasks that had
+  *    already finished reach that host twice (at-least-once).
   *  - **In-memory test sink** (O15): `onlyTesting` collects the union
   *    once and splits it back per slot, in call order, so each emit still
   *    captures its own [[EmittedBatch]]; `getParsedEmittedEvents` can
@@ -56,11 +58,14 @@ final case class EmittedBatch(topic: String, values: Seq[String])
   *    `parsedEventsReverseCompat`.
   *
   * The clock is injectable (the reference's tests freeze time with
-  * MockDate; ours pass a fixed `() => Instant`).
+  * MockDate; ours pass a fixed `() => Instant`), and so is `sink`, the
+  * write of one frame to one host, so tests can observe per-host writes
+  * without a broker.
   */
 final class Emitter(
     val config: EngineConfig,
-    clock: () => Instant = Emitter.WallClock)
+    clock: () => Instant = Emitter.WallClock,
+    sink: (DataFrame, EngineConfig, String) => Unit = KafkaBridge.sink)
   extends Logging {
 
   import Emitter._
@@ -206,7 +211,7 @@ final class Emitter(
     val hosts = resolveHosts(None)
     val writer = enriched.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        write(Seq(Slot(topic, hosts, Some(batch.select("value")), Nil)))
+        write(Seq(Slot(topic, hosts, Some(batch.select("value")), Nil)), isolate = false)
       }
     checkpoint.orElse(config.checkpointLocation)
       .foreach(writer.option("checkpointLocation", _))
@@ -223,62 +228,68 @@ final class Emitter(
 
   /** Run `body` with every emit of the calling thread deferred, then flush
     * them all at once: one Spark job in `onlyTesting` mode, one write per
-    * host set otherwise. Deferred emits keep their call order, batch
+    * host otherwise. Deferred emits keep their call order, batch
     * boundaries and value order. If `body` throws, nothing is flushed.
-    * With `isolate`, a flush that fails re-flushes each emit on its own
-    * and logs the ones that fail, so one bad frame loses only its own
-    * rows (the router's LogAndContinue). A nested scope joins the open
-    * one. */
+    * With `isolate`, a write that fails is retried with each emit on its
+    * own, against the same host only, and the emits that fail alone are
+    * logged, so one bad frame or one down host loses only its own rows
+    * (the router's LogAndContinue). A nested scope joins the open one. */
   private[graft] def scoped(isolate: Boolean)(body: => Unit): Unit =
     if (open.get != null) body
     else {
       val slots = mutable.ArrayBuffer.empty[Slot]
       open.set(slots)
       try body finally open.remove()
-      flush(slots.toSeq, isolate)
+      write(slots.toSeq, isolate)
     }
 
   private def record(slot: Slot): Unit = open.get match {
-    case null => flush(Seq(slot), isolate = false)
+    case null => write(Seq(slot), isolate = false)
     case slots => slots += slot
   }
 
-  private def flush(slots: Seq[Slot], isolate: Boolean): Unit =
-    if (!isolate) write(slots)
-    else try write(slots) catch {
-      case _: Exception if slots.size > 1 => slots.foreach(s => flush(Seq(s), isolate))
-      case e: Exception => logError(s"Emit to ${slots.head.topic} failed", e)
-    }
-
   /** Tag each slot's frame with its index and run the union of all of them
-    * as one job (one write per host set outside `onlyTesting`). Capture
-    * splits the collected rows back per slot: a union keeps each child's
-    * rows in their own order. */
-  private def write(slots: Seq[Slot]): Unit = {
-    val tagged = slots.zipWithIndex.flatMap { case (s, i) =>
+    * as one job: one `collect` in `onlyTesting` mode, otherwise one write
+    * per host. Capture splits the collected rows back per slot: a union
+    * keeps each child's rows in their own order. */
+  private def write(slots: Seq[Slot], isolate: Boolean): Unit = {
+    val parts = slots.zipWithIndex.flatMap { case (s, i) =>
       s.frame.map(f => s -> f.select(lit(i).as("slot"), lit(s.topic).as("topic"), col("value")))
     }
     if (config.onlyTesting) {
-      val rows =
-        if (tagged.isEmpty) Map.empty[Int, Seq[String]]
-        else GraftShims.union(tagged.map(_._2)).collect().toSeq
-          .groupMap(_.getInt(0))(_.getString(2))
+      val rows = mutable.ArrayBuffer.empty[Row]
+      if (parts.nonEmpty) attempt(parts, union(parts), isolate)(rows ++= _.collect())
+      val bySlot = rows.toSeq.groupMap(_.getInt(0))(_.getString(2))
       val batches = slots.zipWithIndex.flatMap { case (s, i) =>
-        val values = if (s.frame.isEmpty) s.docs else rows.getOrElse(i, Nil)
+        val values = if (s.frame.isEmpty) s.docs else bySlot.getOrElse(i, Nil)
         if (values.isEmpty) None else Some(EmittedBatch(s.topic, values))
       }
       synchronized { captured ++= batches }
-    } else tagged.map(_._1.hosts).distinct.foreach { hosts =>
-      val union = GraftShims.union(tagged.filter(_._1.hosts == hosts).map(_._2))
-        .select("value", "topic")
+    } else parts.map(_._1.hosts).distinct.foreach { hosts =>
+      val mine = parts.filter(_._1.hosts == hosts)
+      val all = union(mine)
       // Multi-cluster replication (O3): compute once, write per host.
       // Exactly-once across clusters is impossible; like the reference these
-      // are independent at-least-once sends (SURVEY.md §7.4.7).
-      if (hosts.size > 1) union.persist()
-      try hosts.foreach(KafkaBridge.sink(union, config, _))
-      finally if (hosts.size > 1) union.unpersist()
+      // are independent at-least-once sends (SURVEY.md §7.4.7). Each host
+      // is isolated on its own, so a failing host never re-writes another.
+      if (hosts.size > 1) all.persist()
+      try hosts.foreach(host =>
+        attempt(mine, all, isolate)(f => sink(f.select("value", "topic"), config, host)))
+      finally if (hosts.size > 1) all.unpersist()
     }
   }
+
+  /** Run `job` on `whole`, the union of `parts`. With `isolate`, if it
+    * fails, run `job` on each part alone and log the parts that fail. */
+  private def attempt(parts: Seq[(Slot, DataFrame)], whole: DataFrame, isolate: Boolean)(
+      job: DataFrame => Unit): Unit =
+    try job(whole) catch {
+      case _: Exception if isolate && parts.size > 1 =>
+        parts.foreach(p => attempt(Seq(p), p._2, isolate)(job))
+      case e: Exception if isolate => logError(s"Emit to ${parts.head._1.topic} failed", e)
+    }
+
+  private def union(parts: Seq[(Slot, DataFrame)]): DataFrame = parts.map(_._2).reduce(_ union _)
 
   private def resolveHosts(overwrite: Option[Seq[String]]): Seq[String] =
     overwrite.filter(_.nonEmpty).getOrElse(config.host +: config.additionalHosts)

@@ -194,9 +194,9 @@ final class RouteRegistry(
   }
 
   /** Dispatch and DLQ for one parsed batch in one emit scope, flushed as
-    * one Spark job. Under LogAndContinue a flush that fails at run time
-    * re-flushes each emit on its own and logs the failures — the output
-    * of a per-route try/catch; FailFast rethrows and flushes nothing. */
+    * one Spark job. Under LogAndContinue a write that fails at run time
+    * is retried emit by emit against the same host and the failures are
+    * logged — the output of a per-route try/catch; FailFast rethrows. */
   private def route(all: DataFrame): Unit =
     emitter.scoped(isolate = config.errorPolicy == ErrorPolicy.LogAndContinue) {
       dispatch(all.filter(col(Corrupt).isNull).drop(Corrupt))

@@ -3,22 +3,13 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge to `private[sql]` Column<->Expression conversions (Spark 4.x moved
-  * them behind `org.apache.spark.sql.classic.ExpressionUtils`) and plan
-  * construction (`classic.Dataset.ofRows`). Standard
+  * them behind `org.apache.spark.sql.classic.ExpressionUtils`). Standard
   * pattern for Catalyst-extension libraries: one tiny accessor object in the
   * `org.apache.spark.sql` package, nothing else lives here.
   */
 object GraftShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
-
-  /** One n-ary `Union` of `frames`, by column position. Chaining
-    * `Dataset.union` re-analyses the growing plan at every step, which
-    * costs time quadratic in the number of frames. */
-  def union(frames: Seq[DataFrame]): DataFrame =
-    if (frames.size == 1) frames.head
-    else classic.Dataset.ofRows(frames.head.sparkSession.asInstanceOf[classic.SparkSession],
-      catalyst.plans.logical.Union(frames.map(_.queryExecution.analyzed)))
 
   /** Block until queued listener events are delivered (`listenerBus` is
     * `private[spark]`) — lets metrics collectors read complete task totals. */

@@ -352,4 +352,80 @@ class RouteRegistrySpec extends SparkSuite {
     assert(sc.getPersistentRDDs.size <= before2, "persisted RDDs grew over repeated failing batches")
     assert(strict.emitter.getEmittedEvents.isEmpty)
   }
+
+  /** A registry that writes to hosts (not `onlyTesting`) through a
+    * recording sink: every write that succeeds is logged as
+    * `host -> (topic, value)` rows; a write to a host in `down` throws. */
+  private def hostRegistry(
+      config: EngineConfig,
+      routes: Seq[Route],
+      down: Set[String]): (RouteRegistry, mutable.Buffer[(String, Seq[(String, String)])]) = {
+    val writes = mutable.Buffer.empty[(String, Seq[(String, String)])]
+    val sink = (df: DataFrame, _: EngineConfig, host: String) => {
+      if (down(host)) throw new RuntimeException(s"$host is down")
+      val rows = df.select("topic", "value").collect().toSeq.map(r => (r.getString(0), r.getString(1)))
+      writes.synchronized { writes += host -> rows }
+      ()
+    }
+    val schemas = new EventSchemaRegistry()
+      .register("Created", StructType(Seq(StructField("n", LongType))))
+    val r = new RouteRegistry(config,
+      new Emitter(config, fixedClock("2022-12-08T00:00:00Z"), sink), schemas)
+    routes.foreach(r.add)
+    (r, writes)
+  }
+
+  /** Every `(topic, value)` the `onlyTesting` capture of `routes` holds. */
+  private def capturedRows(routes: Seq[Route]): Seq[(String, String)] = {
+    import spark.implicits._
+    val reg = registry(oneJobConfig(), routes)
+    reg.process(mixed.toDF("topic", "value"))
+    reg.emitter.getEmittedEvents.flatMap(b => b.values.map(b.topic -> _))
+  }
+
+  private def written(writes: Seq[(String, Seq[(String, String)])], host: String) =
+    writes.filter(_._1 == host).flatMap(_._2)
+
+  // emitJson needs onlyTesting; these routes write only frames
+  private val frameRoutes = oneJobRoutes.take(7)
+
+  test("a down replica host: LogAndContinue writes each record to the healthy host once") {
+    import spark.implicits._
+    val cfg = oneJobConfig().copy(host = "up:9092", additionalHosts = Seq("down:9092"))
+    val (reg, writes) = hostRegistry(cfg, frameRoutes, down = Set("down:9092"))
+    reg.process(mixed.toDF("topic", "value"))
+    val want = capturedRows(frameRoutes)
+    assert(want.nonEmpty)
+    assert(writes.map(_._1) == Seq("up:9092"), "the healthy host is written in one job")
+    assert(written(writes.toSeq, "up:9092").sorted == want.sorted)
+
+    val (strict, _) = hostRegistry(cfg.copy(errorPolicy = ErrorPolicy.FailFast), frameRoutes,
+      down = Set("down:9092"))
+    intercept[RuntimeException] { strict.process(mixed.toDF("topic", "value")) }
+  }
+
+  test("a failing host set does not re-write another host set") {
+    import spark.implicits._
+    // the last route overrides its hosts; that second host set is down
+    val routes = frameRoutes :+ Route("t-a", None, (df, em) =>
+      em.emit(df.select(col("n")), "out-c", overwriteHosts = Some(Seq("other:9092"))))
+    val (reg, writes) = hostRegistry(oneJobConfig().copy(host = "up:9092"), routes,
+      down = Set("other:9092"))
+    reg.process(mixed.toDF("topic", "value"))
+    assert(writes.map(_._1) == Seq("up:9092"))
+    assert(written(writes.toSeq, "up:9092").sorted == capturedRows(frameRoutes).sorted)
+  }
+
+  test("a route whose frame fails at run time loses only its own rows on every host") {
+    import spark.implicits._
+    val failing = frameRoutes.updated(1, Route("t-a", None, (df, em) => em.emit(
+      df.select(coalesce(when(col("n") === 5, raise_error(lit("bad row"))), col("n")).as("n")),
+      "out-2")))
+    val cfg = oneJobConfig().copy(host = "a:9092", additionalHosts = Seq("b:9092"))
+    val (reg, writes) = hostRegistry(cfg, failing, down = Set.empty)
+    reg.process(mixed.toDF("topic", "value"))
+    val want = capturedRows(failing)
+    assert(!want.exists(_._1 == "out-2"))
+    Seq("a:9092", "b:9092").foreach(h => assert(written(writes.toSeq, h).sorted == want.sorted, h))
+  }
 }
