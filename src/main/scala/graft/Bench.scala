@@ -109,14 +109,14 @@ object Bench {
       // never OOMs). Verify DOES clear per query — correctness runs feed
       // no timing, so hygiene there is free. For subsidy-free per-query
       // cost, QueryTimer clears between reps.
-      // drain the managed cleanup handles the query's lambda registered
-      // (QueryCleanup) AFTER its reps: within-query reps still reuse the
+      // drain the managed cleanup handles the query's lambda deferred
+      // (SessionScope) AFTER its reps: within-query reps still reuse the
       // cached frames (identical plans plan-match, preserving rep
       // comparability with earlier records), but a managed query's
       // per-call persists no longer outlive it into the rest of the
       // sweep bounded only by LRU pressure (r18 ADVICE). Untimed: the
       // unpersist is non-blocking bookkeeping, not query cost.
-      graft.core.QueryCleanup.drain(spark)
+      graft.core.SessionScope.drain(spark)
       // wall-min and cpu-min may come from different reps: each is the
       // least-polluted observation of its own metric (noise only adds)
       val wall = if (times.exists(_._1 < 0)) -1.0 else times.map(_._1).min

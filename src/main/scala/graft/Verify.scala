@@ -34,10 +34,10 @@ object Verify {
       // execution memory. Queries are independent, so clearing between
       // them is safe and also prevents accidental cross-query cached-plan
       // reuse from masking a query's real cost. The drain runs the
-      // managed cleanup handles the lambda registered (QueryCleanup) —
-      // here mostly to keep the registry itself from growing across the
+      // managed cleanup handles the lambda deferred (SessionScope) —
+      // here mostly to keep the pending list itself from growing across the
       // sweep; clearCache already reclaims the blocks.
-      graft.core.QueryCleanup.drain(spark)
+      graft.core.SessionScope.drain(spark)
       spark.sharedState.cacheManager.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -13,44 +13,31 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Analyzed-DataFrame cache per (session, path): the local analog of a
-    * catalog/metastore caching file indexes and schemas. Without it every
-    * query re-lists the directory and re-reads parquet footers — tens of
-    * redundant driver round-trips per Bench/Verify sweep, and at scale a
-    * listing storm against the object store. DataFrames are immutable, so
-    * reuse within a session is safe; the WEAK session key lets a stopped
-    * session's entries (analyzed plans, file indexes) be GC'd instead of
-    * pinning them for the driver's lifetime. Harness tables are static;
-    * callers that rewrite a table path mid-session must [[invalidate]]. */
-  private val cache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]
-
+  /** Analyzed-DataFrame handle per (session, path), memoized in
+    * [[SessionScope]]: the local analog of a catalog/metastore caching
+    * file indexes and schemas. Without it every query re-lists the
+    * directory and re-reads parquet footers — tens of redundant driver
+    * round-trips per Bench/Verify sweep, and at scale a listing storm
+    * against the object store. DataFrames are immutable, so reuse within
+    * a session is safe; harness tables are static, and a caller that
+    * rewrites a table path mid-session evicts the session's scope. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val perSession = cache.synchronized {
-      cache.computeIfAbsent(spark, s => {
-        // Once-per-session engine invariants, set before the first footer
-        // read (the first `table` call necessarily precedes any read):
-        //  - nanosAsLong lets the vectorized reader accept TIMESTAMP(NANOS)
-        //    encodings of events.ts (see `events` below);
-        //  - session TZ pinned to UTC makes the TimestampNTZ→Timestamp cast
-        //    in `events` value-preserving REGARDLESS of which entry point
-        //    built the session (Bench historically didn't pin it) — the
-        //    cross-engine parity contract (CLAUDE.md) assumes UTC
-        //    throughout, so it is enforced here, where the cast lives.
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        s.conf.set("spark.sql.session.timeZone", "UTC")
-        scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-      })
+    // Once-per-session engine invariants, set before the first footer
+    // read (the first `table` call necessarily precedes any read):
+    //  - nanosAsLong lets the vectorized reader accept TIMESTAMP(NANOS)
+    //    encodings of events.ts (see `events` below);
+    //  - session TZ pinned to UTC makes the TimestampNTZ→Timestamp cast
+    //    in `events` value-preserving REGARDLESS of which entry point
+    //    built the session (Bench historically didn't pin it) — the
+    //    cross-engine parity contract (CLAUDE.md) assumes UTC
+    //    throughout, so it is enforced here, where the cast lives.
+    SessionScope.memo(spark, "", "tables.conf") {
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      spark.conf.set("spark.sql.session.timeZone", "UTC")
     }
-    perSession.getOrElseUpdate(s"$sfDir/$name.parquet",
+    SessionScope.memo(spark, sfDir, "table." + name)(
       spark.read.parquet(s"$sfDir/$name.parquet"))
   }
-
-  /** Drop a session's cached table handles (e.g. after overwriting files
-    * under a previously-read path). */
-  def invalidate(spark: SparkSession): Unit =
-    cache.synchronized { cache.remove(spark); () }
 
   def region(spark: SparkSession, d: String): DataFrame    = table(spark, d, "region")
   def nation(spark: SparkSession, d: String): DataFrame    = table(spark, d, "nation")
@@ -107,18 +94,9 @@ object Tables {
     * repeated per-call planning showed up as avoidable driver work when the
     * same spread() input recurs across a 118-query sweep. Canonical-plan
     * keying makes structurally identical inputs (e.g. the same filter over a
-    * cached table handle, rebuilt each call) hit the cache; harness inputs
+    * cached table handle, rebuilt each call) hit the memo; harness inputs
     * are static files, so a memoized count stays valid for the session. */
-  private val partsCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int]]
-  private def probePartitions(spark: SparkSession, df: DataFrame): Int = {
-    val perSession = partsCache.synchronized {
-      partsCache.computeIfAbsent(spark,
-        _ => scala.collection.concurrent.TrieMap.empty)
-    }
-    perSession.getOrElseUpdate(
-      df.queryExecution.logical.canonicalized, df.rdd.getNumPartitions)
-  }
+  private def probePartitions(spark: SparkSession, df: DataFrame): Int =
+    SessionScope.memo(spark, "", df.queryExecution.logical.canonicalized)(
+      df.rdd.getNumPartitions)
 }

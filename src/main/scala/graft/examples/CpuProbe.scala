@@ -58,9 +58,9 @@ object CpuProbe {
         val (w0, p0) = acc.getOrElse(name, (Double.MaxValue, Double.MaxValue))
         // a -1 cpu sentinel (no com.sun bean) must not win the min fold
         acc(name) = (math.min(w0, dt), if (dc < 0) p0 else math.min(p0, dc))
-        // mirror Bench's post-query drain of registered cleanup handles
-        // (QueryCleanup) so replayed context matches the record's
-        graft.core.QueryCleanup.drain(spark)
+        // mirror Bench's post-query drain of deferred cleanup handles
+        // (SessionScope) so replayed context matches the record's
+        graft.core.SessionScope.drain(spark)
       }
     }
     println("--- min per query (Bench's rule) ---")

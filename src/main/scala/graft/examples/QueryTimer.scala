@@ -49,10 +49,10 @@ object QueryTimer {
       val dc = if (c0 < 0) -1.0 else (cpuNanos() - c0) / 1e9
       println(f"rep=$i rows=$n time=$dt%.3f s cpu=$dc%.3f s" +
         (if (i == 0) " (warmup)" else ""))
-      // managed queries register cleanup handles per invocation
-      // (QueryCleanup): the drain unpersists this rep's frames and keeps
-      // the registry from growing; clearCache drops everything else
-      graft.core.QueryCleanup.drain(spark)
+      // managed queries defer cleanup handles per invocation
+      // (SessionScope): the drain unpersists this rep's frames and keeps
+      // the pending list from growing; clearCache drops everything else
+      graft.core.SessionScope.drain(spark)
       spark.sharedState.cacheManager.clearCache()
     }
     spark.stop()

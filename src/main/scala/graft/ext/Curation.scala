@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables, Tok}
+import graft.core.{SessionScope, Tables, Tok}
 
 /** Dataset-curation operators for a training-data pipeline: deterministic
   * subsampling and train/val/test splitting over `documents`.
@@ -553,7 +553,7 @@ object Curation {
         .withColumn("shard", expr("cum0 div 2000"))
         .select($"shard", $"doc_id", $"source", $"text")
       // per-sfDir path: a census must never read another scale's shards
-      val path = graft.core.ArtifactRoot.path(s, "c13_shards", d)
+      val path = SessionScope.artifactPath(s, "c13_shards", d)
       assigned
         .repartition($"shard")
         .sortWithinPartitions($"doc_id")
@@ -607,7 +607,7 @@ object Curation {
       val lateDay = java.sql.Date.valueOf(maxDay.toLocalDate.minusDays(1))
       val isInc = $"day" === lit(maxDay) ||
         ($"day" === lit(lateDay) && $"event_id" % 7 === 3)
-      val path = graft.core.ArtifactRoot.path(s, "c21_rollup", d)
+      val path = SessionScope.artifactPath(s, "c21_rollup", d)
       // last night's ledger: all non-increment events, partitioned by day
       state(ev.filter(!isInc))
         .write.mode("overwrite").partitionBy("day").parquet(path + "/roll")
@@ -662,7 +662,7 @@ object Curation {
     "c20_format_roundtrip" -> { (s, d) =>
       import s.implicits._
       val docs = Tables.documents(s, d).select($"doc_id", $"source", $"text")
-      val path = graft.core.ArtifactRoot.path(s, "c20_formats", d)
+      val path = SessionScope.artifactPath(s, "c20_formats", d)
       docs.write.mode("overwrite").orc(path + "/orc")
       docs.write.mode("overwrite").option("compression", "gzip")
         .json(path + "/json_gz")
@@ -846,13 +846,13 @@ object Curation {
     // layout write below runs EAGERLY at DataFrame-construction time —
     // the census must read the files actually on disk, so plan-only
     // tooling (ExplainAudit / ShuffleAudit / PlanShapeSpec) pays one
-    // sf-sized parquet write to the session's ArtifactRoot
+    // sf-sized parquet write to the session's artifact root
     // (c22_zorder_<sf> under the per-session tmpdir since r19). The
     // dir is overwrite-mode per (session, sf) — bounded: one copy per
     // scale factor per session, ~MBs at test SFs, reclaimed by the
     // root's JVM shutdown hook — and stays readable within the
     // session, so ZOrderSpec can re-open the same files for its
-    // row-group-skipping measurements via ArtifactRoot.path.
+    // row-group-skipping measurements via SessionScope.artifactPath.
     "c22_zorder_layout" -> { (s, d) =>
       import s.implicits._
       val li = Tables.lineitem(s, d).select($"l_orderkey", $"l_linenumber",
@@ -861,7 +861,7 @@ object Curation {
       val z = li
         .withColumn("z", graft.operators.ZOrder.interleave($"x", $"y"))
         .withColumn("zcell", expr("CAST(z div 4096 AS INT)"))
-      val path = graft.core.ArtifactRoot.path(s, "c22_zorder", d)
+      val path = SessionScope.artifactPath(s, "c22_zorder", d)
       z.repartition($"zcell").sortWithinPartitions($"z")
         .write.mode("overwrite").partitionBy("zcell").parquet(path)
       def census(rows: DataFrame, cell: Column, layout: String): DataFrame =
@@ -909,7 +909,7 @@ object Curation {
     "c23_schema_evolution" -> { (s, d) =>
       import s.implicits._
       val docs = Tables.documents(s, d)
-      val root = graft.core.ArtifactRoot.path(s, "c23_evo", d)
+      val root = SessionScope.artifactPath(s, "c23_evo", d)
       docs.filter($"doc_id" % 3 === 0)
         .write.mode("overwrite").parquet(root + "/gen=1")
       docs.filter($"doc_id" % 3 === 1)

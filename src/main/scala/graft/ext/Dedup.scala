@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables, Tok}
+import graft.core.{SessionScope, Tables, Tok}
 
 /** Deduplication operators for a training-data pipeline, over `documents`
   * and `embeddings`: exact, n-gram Jaccard, MinHash+LSH, SimHash, and
@@ -121,7 +121,7 @@ object Dedup {
     * (which only needs the pair set, so it must not pay a discarded
     * global sort). */
   private def verifiedPairs(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "d_verified") {
+    SessionScope.memo(s, d, "d_verified") {
       // r19: memoized localCheckpoint — d07 and d09 each rebuilt the
       // candidate generation + Jaccard verification per invocation (the
       // persisted sub-frames plan-matched, the join work did not); the
@@ -196,10 +196,10 @@ object Dedup {
     * joins co-partitioned. */
   def ledgerSidecars(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
     val base = Tables.documents(s, d).filter(col("doc_id") % 10 =!= 7)
-    // session-unique artifact root since r19 (graft.core.ArtifactRoot):
+    // session-unique artifact root since r19 (SessionScope.artifactPath):
     // the fixed per-sfDir path risked cross-session overwrites under
     // open lazily-read ledger frames
-    val path = graft.core.ArtifactRoot.path(s, "d22_ledgers", d)
+    val path = SessionScope.artifactPath(s, "d22_ledgers", d)
     base.select(col("doc_id"), md5(col("text").cast("binary")).as("fp"))
       .write.mode("overwrite").parquet(path + "/fp")
     sigsOf(base).write.mode("overwrite").parquet(path + "/sigs")

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{SessionScope, Tables}
 
 /** Graph analytics over the relationship implicit in the fact tables: the
   * customer↔supplier bipartite graph (an edge where a customer's order
@@ -52,7 +52,7 @@ object Graph {
     * order-insensitive (aggregates, joins, ranked windows with total
     * tie-breaks), so results are unchanged. */
   private def custSupp(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "g_cs") {
+    SessionScope.memo(s, d, "g_cs") {
       import s.implicits._
       Tables.orders(s, d).select($"o_orderkey", $"o_custkey")
         .join(Tables.lineitem(s, d).select($"l_orderkey", $"l_suppkey"),
@@ -73,7 +73,7 @@ object Graph {
     * rows of five longs) now feeds both; the build-side `sets` persist
     * is released as soon as the checkpoint materializes. */
   private[ext] def coPairs(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "g_pairs") {
+    SessionScope.memo(s, d, "g_pairs") {
       import s.implicits._
       val sets = custSupp(s, d).groupBy($"sp")
         .agg(sort_array(collect_set($"c")).as("cs"))
@@ -96,7 +96,7 @@ object Graph {
   /** The graph's 1-row distinct-customer census, shared by g03/g04's
     * lift denominators — memoized so neither pays a custSupp pass. */
   private[graft] def coNc(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "g_nc") {
+    SessionScope.memo(s, d, "g_nc") {
       import s.implicits._
       custSupp(s, d).agg(countDistinct($"c").as("nc")).localCheckpoint()
     }
@@ -122,7 +122,7 @@ object Graph {
     * intersection build). End-of-life: g04's documented policy
     * (MEMORY_AND_DISK LRU + Verify's per-query clearCache). */
   private def mutualTopEdges(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "g_mutual") {
+    SessionScope.memo(s, d, "g_mutual") {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       val pairs = coPairs(s, d)
@@ -214,7 +214,7 @@ object Graph {
     * join broadcasts the node-sized frontier/dist side), so the
     * ed2 checkpoint-loses-partitioning hazard does not apply. */
   private def mutualAdj(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "g_adj") {
+    SessionScope.memo(s, d, "g_adj") {
       val ed = mutualTopEdges(s, d)
       ed.select(col("u").as("a"), col("v").as("b"), col("w"))
         .unionByName(ed.select(col("v").as("a"), col("u").as("b"), col("w")))
@@ -224,7 +224,7 @@ object Graph {
   /** The mutual graph's node universe `(n)` — bfs seeds/strands and
     * sssp seeds both derive from it; memoized beside [[mutualAdj]]. */
   private def mutualNodes(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "g_adjn") {
+    SessionScope.memo(s, d, "g_adjn") {
       mutualAdj(s, d).select(col("a").as("n")).distinct().localCheckpoint()
     }
 

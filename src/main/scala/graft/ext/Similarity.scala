@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{SessionScope, Tables}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (`embedding: array<float>`, 64-dim).
@@ -341,19 +341,18 @@ object Similarity {
     * overwrite part files under each other's open serves — the t29
     * twin had to sequence its own steps around exactly that hazard —
     * and t29, t30, and their specs each paid a duplicated build).
-    * One build per session now serves every caller, the knnMemo
-    * pattern: the memoized value is the pair of RE-READ file-backed
-    * frames, which survive `clearCache` (they are parquet reads, not
-    * CacheManager entries), so Verify's per-query hygiene cannot force
-    * a rebuild either. A production rebuild loop that WANTS fresh
-    * builds calls [[ivfpqSaveTrainIndexAt]] with its own versioned
-    * path, exactly like a nightly job writing dated artifacts. */
+    * One build per session now serves every caller via
+    * [[SessionScope.memo]]: the memoized value is the pair of RE-READ
+    * file-backed frames, which survive `clearCache` (they are parquet
+    * reads, not CacheManager entries), so Verify's per-query hygiene
+    * cannot force a rebuild either. A production rebuild loop that
+    * WANTS fresh builds calls [[ivfpqSaveTrainIndexAt]] with its own
+    * versioned path, exactly like a nightly job writing dated
+    * artifacts. */
   private[graft] def ivfpqSaveTrainIndex(
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    hookEviction(s)
-    val fresh = new IndexCell(() =>
-      ivfpqSaveTrainIndexAt(s, d, indexRoot(s, "t29", d)))
-    trainIndexMemo.putIfAbsent((s, d), fresh).getOrElse(fresh).value
+    SessionScope.memo(s, d, "t29_index")(
+      ivfpqSaveTrainIndexAt(s, d, SessionScope.artifactPath(s, "t29", d)))
   }
 
   /** The raw (non-memoized) build at an EXPLICIT path: write + re-read
@@ -394,13 +393,14 @@ object Similarity {
     * bit-exactly, so serving from the files is value-identical to
     * serving from the in-session frames — which s22's oracle proves by
     * replaying the saved-code ADC from the raw tables. Path is per
-    * (session, sfDir) via [[indexRoot]]: per-sfDir because a serving
-    * layer must never open another scale's index, per-session because a
-    * fixed shared path let concurrent sessions overwrite part files
-    * under each other's open serves (r18 verdict). */
+    * (session, sfDir) via [[SessionScope.artifactPath]]: per-sfDir
+    * because a serving layer must never open another scale's index,
+    * per-session because a fixed shared path let concurrent sessions
+    * overwrite part files under each other's open serves (r18
+    * verdict). */
   def ivfpqSaveIndex(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val (cb, enc) = ivfpqFrozenIndex(s, d)
-    val path = indexRoot(s, "s22", d)
+    val path = SessionScope.artifactPath(s, "s22", d)
     cb.coalesce(1).write.mode("overwrite").parquet(path + "/cb")
     enc.write.mode("overwrite").parquet(path + "/enc")
     (s.read.parquet(path + "/cb"), s.read.parquet(path + "/enc"))
@@ -413,6 +413,34 @@ object Similarity {
     * so an increment encoded against the FILES gets byte-identical
     * codes. This is what makes s23's maintenance honest: nothing about
     * the codebook is recomputed from vectors at maintenance time. */
+  /** The exact brute-force top-5 ground-truth slate (query_id,
+    * neighbor_id) — s01's ranking cut to 5, the recall denominator of
+    * TEN catalog queries (s06/s07/s09/s11/s13/s14/s16/s17/s19/s27).
+    * MEMOIZED per (session, dataset) and localCheckpoint'd (r19, guide
+    * §2.4): each consumer previously re-ran the full corpus-scan
+    * brute-force pass per invocation — ten identical executions of the
+    * catalog's most-repeated subplan per bench sweep. The slate is
+    * 25 rows; ground truth for a fixed (corpus, query set) is a
+    * constant, which is exactly what a production recall harness
+    * computes once and reuses across every index evaluation. */
+  private[graft] def exactTop5(s: SparkSession, d: String): DataFrame =
+    SessionScope.memo(s, d, "s01_top5") {
+      queries("s01_cosine_topk")(s, d)
+        .filter(col("rn") <= 5).select(col("query_id"), col("neighbor_id"))
+        .localCheckpoint()
+    }
+
+  /** Memoized [[knnDirEdges]] over the memoized assignment. */
+  private[graft] def knnEdges(s: SparkSession, d: String): DataFrame =
+    SessionScope.memo(s, d, "dir")(knnDirEdges(knnAssigned(s, d)))
+
+  /** The serving loops' bare `(i, j)` edge list, localCheckpoint'd so
+    * every hop plan stays round-local (the g07 lineage lesson) and built
+    * once per session+dataset. */
+  private[graft] def knnG(s: SparkSession, d: String): DataFrame =
+    SessionScope.memo(s, d, "g")(
+      knnEdges(s, d).select(col("i"), col("j")).localCheckpoint())
+
   /** The kNN-graph build stages shared by s21/s28/s29/s30, MEMOIZED per
     * (session, dataset): four queries consume the identical
     * assigned/edge frames, and pre-memoization each either re-persisted
@@ -432,120 +460,8 @@ object Similarity {
     * equi-join on cell is what keeps pair generation off O(n²)),
     * persisted because s21's mutual join reads it twice and the serving
     * loops probe it every hop. */
-  /** One memo slot. The lazy val gives PER-KEY build serialization for
-    * free (the JVM initializes it under this cell's own monitor): two
-    * first callers racing on the same key both evaluate the one cell
-    * that won `putIfAbsent`, so the build still runs exactly once —
-    * without a global lock. That matters because the "g" entry's build
-    * is NOT pure plan construction: its eager `localCheckpoint()` runs a
-    * full Spark job, and under the previous global `synchronized` it
-    * serialized every session's first build behind it. */
-  private final class MemoCell(build: () => DataFrame) {
-    lazy val value: DataFrame = build()
-  }
-
-  private val knnMemo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String, String), MemoCell]()
-  private val knnMemoHooked =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
-
-  /** [[MemoCell]] for a (codebook, coded-corpus) frame PAIR — the saved
-    * train index's memo slot (same per-key lazy-init build-once
-    * guarantee; the build runs Spark write jobs, so it must never hold
-    * a lock another key's caller waits on). */
-  private final class IndexCell(build: () => (DataFrame, DataFrame)) {
-    lazy val value: (DataFrame, DataFrame) = build()
-  }
-
-  private val trainIndexMemo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), IndexCell]()
-
-  /** Session-unique saved-index path — [[graft.core.ArtifactRoot]] is
-    * the shared implementation (every file-materializing family rides
-    * it since r19; the fixed per-sfDir convention it replaces let
-    * concurrent sessions overwrite part files under each other's open
-    * serves). Within a session the memos above additionally guarantee
-    * build-once, so nothing ever overwrites a path an open frame
-    * reads. */
-  private[graft] def indexRoot(s: SparkSession, family: String,
-                               d: String): String =
-    graft.core.ArtifactRoot.path(s, family, d)
-
-  /** Evict every memo entry owned by `s`. Called automatically when the
-    * owning SparkContext ends; call it explicitly when tearing down a
-    * SESSION whose shared context lives on (e.g. `newSession()` pools) —
-    * there is no session-end listener in Spark, so without the explicit
-    * call a stopped session's persisted/checkpointed frames stay pinned
-    * until the context dies. */
-  private[graft] def evictKnnMemo(s: SparkSession): Unit = {
-    knnMemo.keySet.filter(_._1 eq s).foreach(knnMemo.remove)
-    trainIndexMemo.keySet.filter(_._1 eq s).foreach(trainIndexMemo.remove)
-    graft.core.ArtifactRoot.evict(s)
-    knnMemoHooked.remove(s)
-  }
-
-  /** Register the context-end eviction listener for `s` once — shared
-    * by every memo keyed on the session ([[knnMemoized]],
-    * [[ivfpqSaveTrainIndex]], [[indexRoot]]). */
-  private def hookEviction(s: SparkSession): Unit =
-    if (knnMemoHooked.add(s)) {
-      s.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-            evictKnnMemo(s)
-        })
-    }
-
-  /** Lifecycle: entries are evicted when the owning session's context
-    * ends (a listener registered on first insert); see [[evictKnnMemo]]
-    * for session-level teardown under a shared context. Build-once is
-    * guaranteed by [[MemoCell]]'s per-key lazy initialization — only the
-    * cheap putIfAbsent races globally; the (possibly job-running) build
-    * itself never holds a lock any other key's caller waits on.
-    *
-    * Generic beyond kNN: any frame several catalog queries derive from
-    * the same (session, dataset) rides this map under its own `key` —
-    * the kNN-graph entries below and t16/t26's shared BM25 tf frame
-    * ([[TextAnalysis.bm25TfMemo]]). */
-  private[graft] def knnMemoized(s: SparkSession, d: String, key: String)(
-      build: => DataFrame): DataFrame = {
-    hookEviction(s)
-    val fresh = new MemoCell(() => build)
-    knnMemo.putIfAbsent((s, d, key), fresh).getOrElse(fresh).value
-  }
-
-  /** The exact brute-force top-5 ground-truth slate (query_id,
-    * neighbor_id) — s01's ranking cut to 5, the recall denominator of
-    * TEN catalog queries (s06/s07/s09/s11/s13/s14/s16/s17/s19/s27).
-    * MEMOIZED per (session, dataset) and localCheckpoint'd (r19, guide
-    * §2.4): each consumer previously re-ran the full corpus-scan
-    * brute-force pass per invocation — ten identical executions of the
-    * catalog's most-repeated subplan per bench sweep. The slate is
-    * 25 rows; ground truth for a fixed (corpus, query set) is a
-    * constant, which is exactly what a production recall harness
-    * computes once and reuses across every index evaluation. */
-  private[graft] def exactTop5(s: SparkSession, d: String): DataFrame =
-    knnMemoized(s, d, "s01_top5") {
-      queries("s01_cosine_topk")(s, d)
-        .filter(col("rn") <= 5).select(col("query_id"), col("neighbor_id"))
-        .localCheckpoint()
-    }
-
-  /** Memoized [[knnDirEdges]] over the memoized assignment. */
-  private[graft] def knnEdges(s: SparkSession, d: String): DataFrame =
-    knnMemoized(s, d, "dir")(knnDirEdges(knnAssigned(s, d)))
-
-  /** The serving loops' bare `(i, j)` edge list, localCheckpoint'd so
-    * every hop plan stays round-local (the g07 lineage lesson) and built
-    * once per session+dataset. */
-  private[graft] def knnG(s: SparkSession, d: String): DataFrame =
-    knnMemoized(s, d, "g")(
-      knnEdges(s, d).select(col("i"), col("j")).localCheckpoint())
-
   private[graft] def knnAssigned(s: SparkSession, d: String): DataFrame =
-    knnMemoized(s, d, "assigned")(knnAssignedImpl(s, d))
+    SessionScope.memo(s, d, "assigned")(knnAssignedImpl(s, d))
 
   /** s31's core on arbitrary anchor/corpus frames (both in
     * `(vec_id, label, v, nrm)` shape): per anchor, the top-3
@@ -642,7 +558,7 @@ object Similarity {
       val isNew = col("vec_id") % 10 === 7
       // session-unique artifact path (see ivfpqSaveIndex): the rebuild
       // per invocation is the point of this query, the path is not
-      val path = indexRoot(s, "s23", d)
+      val path = SessionScope.artifactPath(s, "s23", d)
       // the saved base index (in production: last night's artifact)
       val cb = ivfpqCoarseCb(e)
       cb.coalesce(1).write.mode("overwrite").parquet(path + "/cb")
@@ -691,7 +607,7 @@ object Similarity {
       import s.implicits._
       val e = vectors(s, d)
       val isDel = col("vec_id") % 10 === 3
-      val path = indexRoot(s, "s24", d)
+      val path = SessionScope.artifactPath(s, "s24", d)
       val cb = ivfpqCoarseCb(e)
       cb.coalesce(1).write.mode("overwrite").parquet(path + "/cb")
       val cbR = s.read.parquet(path + "/cb")

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables, Tok}
+import graft.core.{SessionScope, Tables, Tok}
 
 /** Text-analysis operators for a large-scale training-data pipeline, over
   * the `documents` table: token counting, quality scoring, language ID,
@@ -298,21 +298,25 @@ object TextAnalysis {
   /** The tokenized train-side term-frequency frame `(train_id, dl, t, tf)`
     * every BM25-shaped index derives from — the one WordCounts corpus
     * scan, persisted because df/dl/stats all fold over it. */
-  private[graft] def bm25Tf(s: SparkSession, docs: DataFrame): DataFrame = {
+  private[graft] def bm25Tf(s: SparkSession, docs: DataFrame): DataFrame =
+    bm25TfPlan(s, docs)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** [[bm25Tf]]'s un-persisted plan. */
+  private def bm25TfPlan(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     Tables.spread(s, docs.filter(!Curation.isEvalDoc($"doc_id")))
       .select($"doc_id".as("train_id"), split(trim($"text"), Tok.Ws).as("w"))
       .select($"train_id", size($"w").cast("long").as("dl"),
         explode(graft.functions.WordCounts($"w")).as("wc"))
       .select($"train_id", $"dl", $"wc.t".as("t"), $"wc.tf".as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** [[bm25Tf]] MEMOIZED per (session, dataset) — t16 and t26 derive
     * their postings indexes (same tf/df/stats build, different idf) from
     * the identical corpus scan, so a session running both (a bench sweep,
     * a serving process hosting both retrievers) should tokenize the
-    * train corpus ONCE. Rides [[Similarity.knnMemoized]] — the generic
+    * train corpus ONCE. Rides [[SessionScope.memo]] — the generic
     * per-(session, dataset, key) memo — rather than CacheManager
     * plan-matching, which silently breaks the moment any caller
     * unpersists or reshapes the shared subplan (the r14 kNN lesson).
@@ -322,14 +326,12 @@ object TextAnalysis {
     * every impacts build re-ran the WordCounts tokenization THREE times
     * per action (tf feeds the postings row, the df fold and the stats
     * fold of one plan; measured 30–58 process-cpu-s per cache-cleared
-    * t16 rep at sf0.1) — the exact ed2/bpeRound5 storage lesson. */
+    * t16 rep at sf0.1) — the exact ed2/bpeRound5 storage lesson. The
+    * checkpoint reads the un-persisted plan: a persist in front of it
+    * would only write a cache copy the checkpoint then copies again. */
   private[graft] def bm25TfMemo(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "bm25tf") {
-      val tf = bm25Tf(s, Tables.documents(s, d))
-      val out = tf.localCheckpoint()
-      tf.unpersist(false)
-      out
-    }
+    SessionScope.memo(s, d, "bm25tf")(
+      bm25TfPlan(s, Tables.documents(s, d)).localCheckpoint())
 
   /** The impacts index for one idf form over the MEMOIZED tf frame —
     * the df fold and idf×tfn projection stay LAZY (r20, measured): each
@@ -410,21 +412,17 @@ object TextAnalysis {
     * ARRIVING probe documents against the static index + embedding table.
     * Every per-probe quantity (slate, min-max normalizer, blend) derives
     * only from that probe's own rows, so the union over any probe
-    * batching equals the one-shot batch run. */
-  private[graft] def hybridRerank(probeTerms: DataFrame, post: DataFrame,
-                                  emb: DataFrame): DataFrame =
-    hybridRerankManaged(probeTerms, post, emb)._1
-
-  /** [[hybridRerank]] plus a cleanup handle that unpersists the two
-    * intermediate frames (`scored`, `cand`) it caches per call. The
-    * catalog lambda defers its handle to the runner via
-    * [[graft.core.QueryCleanup]] (the runner materializes the frame
-    * after the lambda returns — r18 ADVICE: Bench's no-clear reps mode
-    * otherwise accumulated the per-call persists); a LONG-RUNNING
-    * serving caller — one rerank per micro-batch — invokes the handle
-    * inline after materializing each batch's result. Unpersist is
-    * non-blocking: the frames are dead by then, eviction can lag the
-    * next batch safely. */
+    * batching equals the one-shot batch run.
+    *
+    * Returns a cleanup handle that unpersists the two intermediate
+    * frames (`scored`, `cand`) it caches per call. The catalog lambda
+    * defers its handle to the runner via [[SessionScope.defer]] (the
+    * runner materializes the frame after the lambda returns — r18
+    * ADVICE: Bench's no-clear reps mode otherwise accumulated the
+    * per-call persists); every other caller — a serving loop, one
+    * rerank per micro-batch — invokes the handle after materializing
+    * the result. Unpersist is non-blocking: the frames are dead by then,
+    * eviction can lag the next batch safely. */
   private[graft] def hybridRerankManaged(
       probeTerms: DataFrame, post: DataFrame,
       emb: DataFrame): (DataFrame, () => Unit) = {
@@ -546,49 +544,14 @@ object TextAnalysis {
     * scan of the embedded train corpus, per-probe top-5 via the salted
     * TopK; the corpus never shuffles and nothing here is quadratic in
     * corpus size (probes × corpus is the irreducible exact-ground-truth
-    * cost, embarrassingly scan-parallel). */
-  private[graft] def rerankRecall(probeTerms: DataFrame, post: DataFrame,
-                                  emb: DataFrame): DataFrame =
-    rerankRecallManaged(probeTerms, post, emb)._1
-
-  /** [[rerankRecall]] plus the cleanup handle the r17 version dropped
-    * (the r17 verdict's one hygiene defect): the census persists three
-    * frames per call — the inner scoring pair via [[rerankJointScores]]
-    * plus its own `joint`/`slate` — and a long-running caller (an
-    * ablation sweep re-grading per index rebuild — the t30 rebuild-loop
-    * spec exercises exactly this rhythm) must reclaim them after
-    * materializing each census, exactly like [[hybridRerankManaged]].
-    * The t27 catalog lambda defers its handle to the runner via
-    * [[graft.core.QueryCleanup]]. */
-  private[graft] def rerankRecallManaged(
-      probeTerms: DataFrame, post: DataFrame,
-      emb: DataFrame): (DataFrame, () => Unit) = {
-    val s = post.sparkSession
-    import s.implicits._
-    val (jointRaw, innerCleanup) = rerankJointScores(probeTerms, post, emb)
-    val evV = emb.filter($"vec_id" % 100 === 0)
-      .select($"vec_id".as("eval_id"), $"v".as("ev"), $"nrm".as("enrm"))
-    val trV = emb.filter($"vec_id" % 10 =!= 0)
-      .select($"vec_id".as("train_id"), $"v".as("tv"), $"nrm".as("tnrm"))
-    // same fixed-point cosine discipline as the rerank's cfx arm, so the
-    // ground truth and the slate rank in the same integer space
-    val exact = graft.operators.TopK.perKey(
-        trV.crossJoin(broadcast(evV))
-          .select($"eval_id", $"train_id",
-            round(Similarity.cosineWithNorms($"tv", $"ev", $"tnrm", $"enrm")
-              * lit(1e6)).cast("long").as("cfx")),
-        $"eval_id", Seq($"cfx".desc, $"train_id"), 5, saltFrom = $"train_id")
-      .select($"eval_id", $"train_id")
-    val (out, core) = rerankRecallCore(jointRaw, exact, emb)
-    (out, () => { core(); innerCleanup(); () })
-  }
-
-  /** The census downstream of a PRE-BUILT joint frame and exact top-5
-    * arm — the t27 catalog lambda passes the memoized joint inputs and
-    * the top-5 PREFIX of the memoized brute top-10 rank list (the salted
+    * cost, embarrassingly scan-parallel).
+    *
+    * Runs downstream of a PRE-BUILT joint frame and exact top-5 arm —
+    * the t27 catalog lambda passes the memoized joint inputs and the
+    * top-5 PREFIX of the memoized brute top-10 rank list (the salted
     * TopK at k=5 is exactly the first 5 rows of the same total order at
-    * k=10, so the set is identical); the generic entry above builds its
-    * own. Persists the per-call joint/slate pair (ranked twice). */
+    * k=10, so the set is identical). Persists the per-call joint/slate
+    * pair (ranked twice); the handle unpersists them. */
   private[graft] def rerankRecallCore(
       jointRaw: DataFrame, exact: DataFrame,
       emb: DataFrame): (DataFrame, () => Unit) = {
@@ -677,8 +640,8 @@ object TextAnalysis {
 
   /** t28's reciprocal-rank fusion over a frame of probe DOCUMENTS
     * (`doc_id`, `text`) against a FROZEN impacts index and embedding
-    * table — factored like [[hybridRerank]] so a serving twin can run
-    * the identical definition per micro-batch of arriving probes. Both
+    * table — factored like [[hybridRerankManaged]] so a serving twin can
+    * run the identical definition per micro-batch of arriving probes. Both
     * arms rank PER PROBE (the lexical TopK and the vector TopK each
     * partition by eval_id), so the union over any probe batching equals
     * the one-shot batch run — rank-space fusion has no cross-probe
@@ -689,17 +652,13 @@ object TextAnalysis {
     * joined to the embedding table, structurally matching the oracle's
     * `vec_id % 100 = 0` under the canary-pinned embeddings ⊆ documents
     * invariant, so a probe whose text tokenizes to NOTHING (null text)
-    * still fuses its vector arm instead of silently vanishing. */
-  private[graft] def rrfFusion(probes: DataFrame, post: DataFrame,
-                               emb: DataFrame): DataFrame =
-    rrfFusionManaged(probes, post, emb)._1
-
-  /** [[rrfFusion]] plus the cleanup handle that unpersists the one
-    * intermediate frame (`scored`) it caches per call — the managed
-    * form a long-running serving loop must call after materializing
-    * each micro-batch's slate, or per-batch cache entries accumulate
-    * bounded only by LRU pressure (the r17 verdict's hygiene defect;
-    * [[hybridRerankManaged]] is the established pattern). */
+    * still fuses its vector arm instead of silently vanishing.
+    *
+    * Returns a cleanup handle that unpersists the one intermediate frame
+    * (`scored`) it caches per call — a long-running serving loop must
+    * call it after materializing each micro-batch's slate, or per-batch
+    * cache entries accumulate bounded only by LRU pressure (the r17
+    * verdict's hygiene defect). */
   private[graft] def rrfFusionManaged(
       probes: DataFrame, post: DataFrame,
       emb: DataFrame): (DataFrame, () => Unit) =
@@ -709,7 +668,7 @@ object TextAnalysis {
     * list over the embedded train corpus — `(eval_id, train_id,
     * vec_rank)`, s01's broadcast-probes-into-one-scan shape. The probe
     * universe is the probe IDS that have an embedding (see
-    * [[rrfFusion]]). t29 swaps this arm for the SAVED-index serve
+    * [[rrfFusionManaged]]). t29 swaps this arm for the SAVED-index serve
     * ([[Similarity.ivfpqServedTrainRanks]]) — same frame shape, same
     * fusion core. */
   private[graft] def rrfVecArmBrute(probes: DataFrame,
@@ -755,7 +714,7 @@ object TextAnalysis {
     * serving twins keep the generic probe-frame entry points — a
     * micro-batch's probes are not the session constant. */
   private[graft] def probeScoredMemo(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "bm25sc_sq") {
+    SessionScope.memo(s, d, "bm25sc_sq") {
       bm25Scores(bm25ImpactsIdfMemoTf(s, d, sqrtIdf),
           bm25ProbeTerms(Tables.documents(s, d)))
         .localCheckpoint()
@@ -763,7 +722,7 @@ object TextAnalysis {
 
   /** See [[probeScoredMemo]]. */
   private[graft] def rrfLexArmMemo(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "rrf_lex") {
+    SessionScope.memo(s, d, "rrf_lex") {
       rrfLexArm(probeScoredMemo(s, d)).localCheckpoint()
     }
 
@@ -779,7 +738,7 @@ object TextAnalysis {
 
   /** See [[probeScoredMemo]]. */
   private[graft] def rrfVecExactMemo(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "rrf_vecx") {
+    SessionScope.memo(s, d, "rrf_vecx") {
       import s.implicits._
       rrfVecArmBrute(
           Tables.documents(s, d).filter($"doc_id" % 100 === 0),
@@ -790,7 +749,7 @@ object TextAnalysis {
   /** See [[probeScoredMemo]]. t30 reads the slate's (eval_id, train_id)
     * set; t31 additionally grades by its rank column. */
   private[graft] def rrfExactSlateMemo(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "rrf_exsl") {
+    SessionScope.memo(s, d, "rrf_exsl") {
       rrfFuseRanks(rrfLexArmMemo(s, d), rrfVecExactMemo(s, d))
         .localCheckpoint()
     }
@@ -1009,7 +968,7 @@ object TextAnalysis {
     * top-5 is the round's argmax pair, the same row the old
     * `orderBy(cnt desc, pair).limit(1)` produced. */
   private[graft] def bpeRound5(s: SparkSession, d: String, i: Int): DataFrame =
-    Similarity.knnMemoized(s, d, s"bpe_t5_$i") {
+    SessionScope.memo(s, d, s"bpe_t5_$i") {
       // localCheckpoint, NOT persist: a memoized frame's persist would
       // register in the CacheManager exactly once and the first
       // sweep-side clearCache() would strip it permanently (the ed2
@@ -1062,7 +1021,7 @@ object TextAnalysis {
     * training executes at most once per session (a cache read when t12
     * has already run, the full 3-scan replay otherwise). */
   private[graft] def bpeWinner(s: SparkSession, d: String, i: Int): DataFrame =
-    Similarity.knnMemoized(s, d, s"bpe_w$i") {
+    SessionScope.memo(s, d, s"bpe_w$i") {
       import s.implicits._
       bpeRound5(s, d, i).filter($"rnk" === 1).select($"pair").localCheckpoint()
     }
@@ -1074,7 +1033,7 @@ object TextAnalysis {
     * and its sketch from it; t21 feeds sketches AND the exact pairwise
     * overlap. */
   private def kmvDistinctHashes(s: SparkSession, d: String): DataFrame =
-    Similarity.knnMemoized(s, d, "kmv_dm") {
+    SessionScope.memo(s, d, "kmv_dm") {
       // r19: memoized localCheckpoint instead of a per-invocation persist
       // — t09 and t21 previously shared the corpus-wide distinct only via
       // CacheManager plan-matching (and re-ran it whenever a sweep
@@ -1657,13 +1616,13 @@ object TextAnalysis {
       // the dense probe scoring is the memoized session constant (r20);
       // only the per-call candidate slate persists here.
       // a catalog lambda cannot invoke the cleanup handle itself (the
-      // runner materializes the frame after we return) — register it so
-      // the runner drains it post-materialization (QueryCleanup; the
+      // runner materializes the frame after we return) — defer it so
+      // the runner drains it post-materialization (SessionScope; the
       // r18 ADVICE: Bench's no-clear reps mode otherwise accumulates
       // each managed query's per-call persists under LRU pressure only)
       val (out, cleanup) =
         hybridRerankFromScored(probeScoredMemo(s, d), embWithNorms(s, d))
-      graft.core.QueryCleanup.register(s, cleanup)
+      SessionScope.defer(s, cleanup)
       out
     },
 
@@ -1671,7 +1630,7 @@ object TextAnalysis {
     // quality ablation every two-stage retriever ships with: per
     // embedded eval probe, recall@5 of t26's blended slate vs (a) the
     // corpus-wide brute-force cosine top-5 and (b) the cosine-only
-    // top-5 of the slate's own candidate set. See [[rerankRecall]] for
+    // top-5 of the slate's own candidate set. See [[rerankRecallCore]] for
     // the full framing (why the corpus arm is honestly ~0 on random
     // synthetic embeddings and the candidate arm carries the hash
     // teeth).
@@ -1686,7 +1645,7 @@ object TextAnalysis {
       val exact = rrfVecExactMemo(s, d).filter($"vec_rank" <= 5)
         .select($"eval_id", $"train_id")
       val (out, core) = rerankRecallCore(joint, exact, emb)
-      graft.core.QueryCleanup.register(s, () => { core(); jointCleanup() })
+      SessionScope.defer(s, () => { core(); jointCleanup() })
       out
     },
 
@@ -1717,7 +1676,7 @@ object TextAnalysis {
       // both arms are the memoized session constants (r20): the fusion
       // itself is a full-outer join of two ≤10-rows-per-probe
       // checkpointed frames + the salted top-5 — no per-call persists,
-      // so nothing to register with QueryCleanup
+      // so nothing to defer to SessionScope
       rrfFuseRanks(rrfLexArmMemo(s, d), rrfVecExactMemo(s, d))
     },
 
@@ -1749,7 +1708,7 @@ object TextAnalysis {
       // cleanup deferred to the runner's drain (see t26)
       val vecSrv = Similarity.ivfpqServedTrainRanks(s, d, 10)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.core.QueryCleanup.register(s, () => { vecSrv.unpersist(false); () })
+      SessionScope.defer(s, () => { vecSrv.unpersist(false); () })
       rrfFuseRanks(rrfLexArmMemo(s, d), vecSrv)
     },
 
@@ -1775,7 +1734,7 @@ object TextAnalysis {
         rrfVecExactMemo(s, d),
         Similarity.ivfpqServedTrainRanks(s, d, 10),
         embWithNorms(s, d))
-      graft.core.QueryCleanup.register(s, cleanup)
+      SessionScope.defer(s, cleanup)
       out
     },
 
@@ -1801,7 +1760,7 @@ object TextAnalysis {
             $"rank".cast("long").as("exact_rank")),
         Similarity.ivfpqServedTrainRanks(s, d, 10),
         embWithNorms(s, d))
-      graft.core.QueryCleanup.register(s, cleanup)
+      SessionScope.defer(s, cleanup)
       out
     },
 

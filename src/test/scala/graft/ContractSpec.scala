@@ -1,9 +1,12 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Driver-contract guard: the shapes the harness relies on.
   *  - `entry` returns rows at sf0.001 (t1 smoke);
   *  - every `oracleSql` key has a matching query;
-  *  - every registered query executes and returns rows at sf0.001.
+  *  - every registered query executes and returns rows at sf0.001;
+  *  - per-session state lives only in `graft.core.SessionScope`.
   */
 class ContractSpec extends SparkSuite {
 
@@ -88,5 +91,22 @@ class ContractSpec extends SparkSuite {
       if (n == 0) Some(name) else None
     }
     assert(empty.isEmpty, s"queries with zero rows at sf0.001: $empty")
+  }
+
+  test("session state has one owner: only SessionScope keys maps by session or hooks context end") {
+    // a second session-keyed map means a second lifecycle to evict and a
+    // second listener pinning sessions until the context stops
+    val owner = "graft/core/SessionScope.scala"
+    val sessionKeyed = "Map\\[\\s*\\(?\\s*SparkSession\\b".r
+    val offenders = scala.util.Using.resource(
+        java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))) {
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }.filterNot(_.toString.endsWith(owner)).flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      (if (sessionKeyed.findFirstIn(src).isDefined) Seq(s"$f: map keyed by SparkSession") else Nil) ++
+        (if (src.contains("onApplicationEnd")) Seq(s"$f: onApplicationEnd listener") else Nil)
+    }
+    assert(offenders.isEmpty,
+      s"per-session state belongs in $owner: ${offenders.mkString("; ")}")
   }
 }

@@ -41,7 +41,7 @@ class RuntimeFilteringSpec extends SparkSuite {
     // spec-owned fixture, but the same session-unique convention as the
     // query artifacts: a fixed tmpdir name would let a concurrent
     // session overwrite the layout between this write and the pruned read
-    val path = graft.core.ArtifactRoot.path(spark, "spec_dpp_events", sf)
+    val path = graft.core.SessionScope.artifactPath(spark, "spec_dpp_events", sf)
     val ev = graft.core.Tables.events(spark, sf)
       .select(to_date($"ts").cast("string").as("day"), $"event_id", $"value")
     ev.write.mode("overwrite").partitionBy("day").parquet(path)

@@ -21,10 +21,11 @@ trait SparkSuite extends AnyFunSuite {
     () => i
   }
 
-  /** Drain the per-session QueryCleanup registry after every test: a
+  /** Drain the session's deferred cleanup handles
+    * (`graft.core.SessionScope.drain`) after every test: a
     * spec that invokes a catalog lambda is that query's RUNNER, so it
     * owes the runner's drain (Verify/Bench do the same). Without this,
-    * the managed queries' registered-but-undrained persists accumulate
+    * the managed queries' deferred-but-undrained persists accumulate
     * across the suite AND plan-alias with frames a later test builds
     * itself — its cleanup then uncaches the shared entry and the
     * CacheManager's recache-of-dependents makes alien cache entries
@@ -32,5 +33,5 @@ trait SparkSuite extends AnyFunSuite {
     * loop census tripping over the t26–t29 specs' undrained frames). */
   override protected def withFixture(test: NoArgTest): org.scalatest.Outcome =
     try super.withFixture(test)
-    finally graft.core.QueryCleanup.drain(spark)
+    finally graft.core.SessionScope.drain(spark)
 }

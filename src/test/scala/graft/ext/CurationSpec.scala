@@ -174,7 +174,7 @@ class CurationSpec extends SparkSuite {
     // write-layout invariants: exactly one data file per shard, rows
     // inside each file in ascending doc_id order (deterministic layout a
     // trainer can stream without sorting)
-    val path = graft.core.ArtifactRoot.path(spark, "c13_shards", sf)
+    val path = graft.core.SessionScope.artifactPath(spark, "c13_shards", sf)
     val rows = spark.read.parquet(path)
       .select(col("shard").cast("long").as("shard"), col("doc_id"),
         input_file_name().as("f"))
@@ -306,7 +306,7 @@ class CurationSpec extends SparkSuite {
     // two jobs must have written the ledger, and the second one must have
     // touched exactly the two maintained day partitions — a full rewrite
     // (one uuid everywhere) or an over-eager swap both fail here
-    val root = new java.io.File(graft.core.ArtifactRoot.path(
+    val root = new java.io.File(graft.core.SessionScope.artifactPath(
       spark, "c21_rollup", "/root/testdata/sf0.001") + "/roll")
     val dayDirs = root.listFiles().filter(_.getName.startsWith("day="))
     assert(dayDirs.length >= 3, s"need >2 day partitions, got ${dayDirs.length}")
@@ -346,7 +346,7 @@ class CurationSpec extends SparkSuite {
       }
     }
     // the merged schema carries the union of all generations' columns
-    val root = graft.core.ArtifactRoot.path(spark, "c23_evo", sf)
+    val root = graft.core.SessionScope.artifactPath(spark, "c23_evo", sf)
     val gens = Seq(1, 2, 3).map(g => s"$root/gen=$g")
     val merged = spark.read.option("mergeSchema", "true")
       .option("basePath", root).parquet(gens: _*)

@@ -4,8 +4,9 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkSuite
+import graft.core.SessionScope
 
-/** Contract of the kNN-graph memo (`Similarity.knnMemoized`), which
+/** Contract of the kNN-graph memo (`SessionScope.memo`), which
   * s21/s28/s29/s30 and the c26/s31 serving twins all ride:
   *   1. build-once — two first callers racing on the SAME key run the
   *      build exactly once (the r13/r14 double-persist/double-build
@@ -14,9 +15,10 @@ import graft.SparkSuite
   *      different key's build behind it (the "g" entry's eager
   *      localCheckpoint runs a full Spark job; under the pre-r16 global
   *      `synchronized` every session's first build queued behind it);
-  *   3. explicit eviction — `evictKnnMemo(session)` drops the session's
-  *      entries so a later call rebuilds (session-level teardown under a
-  *      shared context, where no context-end listener will ever fire).
+  *   3. explicit eviction — `SessionScope.evict(session)` drops the
+  *      session's entries so a later call rebuilds (session-level teardown
+  *      under a shared context, where no context-end listener will ever
+  *      fire).
   */
 class KnnMemoSpec extends SparkSuite {
 
@@ -28,7 +30,7 @@ class KnnMemoSpec extends SparkSuite {
       new Thread(() => {
         ready.countDown()
         ready.await(5, TimeUnit.SECONDS)
-        val df = Similarity.knnMemoized(spark, "memo-spec-ds1", "k1") {
+        val df = SessionScope.memo(spark, "memo-spec-ds1", "k1") {
           builds.incrementAndGet()
           Thread.sleep(50) // widen the race window
           spark.range(3).toDF("i")
@@ -40,14 +42,14 @@ class KnnMemoSpec extends SparkSuite {
     assert(builds.get() == 1, s"build ran ${builds.get()} times, expected 1")
     assert(results.size == 2 && results.toArray.distinct.length == 1,
       "both callers must receive the same memoized frame")
-    Similarity.evictKnnMemo(spark)
+    SessionScope.evict(spark)
   }
 
   test("different keys: a blocked build does not serialize other keys") {
     val slowEntered = new CountDownLatch(1)
     val release = new CountDownLatch(1)
     val slow = new Thread(() => {
-      Similarity.knnMemoized(spark, "memo-spec-ds2", "slow") {
+      SessionScope.memo(spark, "memo-spec-ds2", "slow") {
         slowEntered.countDown()
         release.await(10, TimeUnit.SECONDS)
         spark.range(1).toDF("i")
@@ -61,7 +63,7 @@ class KnnMemoSpec extends SparkSuite {
     // await below times out red.
     val fastDone = new CountDownLatch(1)
     val fast = new Thread(() => {
-      Similarity.knnMemoized(spark, "memo-spec-ds2", "fast") {
+      SessionScope.memo(spark, "memo-spec-ds2", "fast") {
         spark.range(2).toDF("i")
       }
       fastDone.countDown()
@@ -72,7 +74,7 @@ class KnnMemoSpec extends SparkSuite {
     slow.join(10000); fast.join(10000)
     assert(fastCompleted,
       "an independent key's build was serialized behind another key's")
-    Similarity.evictKnnMemo(spark)
+    SessionScope.evict(spark)
   }
 
   test("saved train index: one memoized build per (session, dataset) — t30 rides t29's files, fresh-path build agrees, eviction rebuilds") {
@@ -99,35 +101,35 @@ class KnnMemoSpec extends SparkSuite {
     // the coded-corpus part listing (name, mtime, size) must be
     // identical before and after each query — an overwrite would bump
     // mtimes even with equal bytes
-    val encDir = new java.io.File(Similarity.indexRoot(spark, "t29", sf) + "/enc")
+    val encDir = new java.io.File(SessionScope.artifactPath(spark, "t29", sf) + "/enc")
     def listing: Set[(String, Long, Long)] = encDir.listFiles()
       .map(f => (f.getName, f.lastModified, f.length)).toSet
     val snap = listing
     assert(graft.SparkEntry.queries("t29_rrf_served")(spark, sf).count() > 0)
-    graft.core.QueryCleanup.drain(spark)
+    SessionScope.drain(spark)
     assert(listing == snap, "the t29 query rebuilt the memoized index")
     assert(graft.SparkEntry.queries("t30_served_fusion_recall")(spark, sf)
       .count() > 0)
-    graft.core.QueryCleanup.drain(spark)
+    SessionScope.drain(spark)
     assert(listing == snap,
       "the t30 query rebuilt the index t29 already built — the memo is " +
         "not shared across the two consumers")
-    Similarity.evictKnnMemo(spark)
+    SessionScope.evict(spark)
     val (cb3, _) = Similarity.ivfpqSaveTrainIndex(spark, sf)
     assert(!(cb3 eq cb1), "post-eviction call must rebuild")
-    Similarity.evictKnnMemo(spark)
+    SessionScope.evict(spark)
   }
 
-  test("evictKnnMemo drops the session's entries so a rebuild happens") {
+  test("evict drops the session's entries so a rebuild happens") {
     val builds = new AtomicInteger(0)
-    def get() = Similarity.knnMemoized(spark, "memo-spec-ds3", "k") {
+    def get() = SessionScope.memo(spark, "memo-spec-ds3", "k") {
       builds.incrementAndGet(); spark.range(1).toDF("i")
     }
     get(); get()
     assert(builds.get() == 1, "second call must hit the memo")
-    Similarity.evictKnnMemo(spark)
+    SessionScope.evict(spark)
     get()
     assert(builds.get() == 2, "post-eviction call must rebuild")
-    Similarity.evictKnnMemo(spark)
+    SessionScope.evict(spark)
   }
 }

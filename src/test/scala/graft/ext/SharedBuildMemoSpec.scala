@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSuite
+import graft.core.SessionScope
 
 /** Contract of the round-19 shared-build memos — the frames several
   * catalog queries derive from one (session, dataset):
@@ -13,7 +14,7 @@ import graft.SparkSuite
   *
   * Two properties the r19 optimization round learned the hard way:
   *   1. build-once instance identity — every caller gets the SAME
-  *      DataFrame (the knnMemo contract, extended to these keys);
+  *      DataFrame (the `SessionScope.memo` contract);
   *   2. cache-sweep survival — the memoized frames must be RDD-backed
   *      (localCheckpoint), because a memoized PERSIST registers in the
   *      CacheManager exactly once and the first sweep-side clearCache()
@@ -25,7 +26,7 @@ class SharedBuildMemoSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("graph pair strengths: one build per session, RDD-backed, sweep-proof") {
-    Similarity.evictKnnMemo(spark)
+    SessionScope.evict(spark)
     val a = Graph.coPairs(spark, sf)
     val b = Graph.coPairs(spark, sf)
     assert(a eq b, "second caller must receive the memoized frame")
@@ -38,11 +39,11 @@ class SharedBuildMemoSpec extends SparkSuite {
       "pair strengths must survive a cache sweep unchanged")
     // the nc census both lift denominators ride
     assert(Graph.coNc(spark, sf).collect().head.getLong(0) > 0)
-    Similarity.evictKnnMemo(spark)
+    SessionScope.evict(spark)
   }
 
   test("bpe rounds + winners: one training per session; winner is the round's rank-1 pair") {
-    Similarity.evictKnnMemo(spark)
+    SessionScope.evict(spark)
     val r1a = TextAnalysis.bpeRound5(spark, sf, 1)
     val r1b = TextAnalysis.bpeRound5(spark, sf, 1)
     assert(r1a eq r1b, "round table must be memoized")
@@ -58,11 +59,11 @@ class SharedBuildMemoSpec extends SparkSuite {
       assert(win.length == 1 && win.sameElements(top),
         s"round-$i winner must equal the round table's rank-1 pair")
     }
-    Similarity.evictKnnMemo(spark)
+    SessionScope.evict(spark)
   }
 
   test("exact top-5 ground truth: memoized, RDD-backed, equals s01's slate") {
-    Similarity.evictKnnMemo(spark)
+    SessionScope.evict(spark)
     val a = Similarity.exactTop5(spark, sf)
     assert(a eq Similarity.exactTop5(spark, sf))
     assert(a.queryExecution.analyzed.getClass.getSimpleName == "LogicalRDD")
@@ -71,11 +72,11 @@ class SharedBuildMemoSpec extends SparkSuite {
       .select("query_id", "neighbor_id").collect().map(_.toSeq).toSet
     assert(a.collect().map(_.toSeq).toSet == expected,
       "memoized slate must equal the live s01 ranking cut to 5")
-    Similarity.evictKnnMemo(spark)
+    SessionScope.evict(spark)
   }
 
   test("verified near-dup pairs: memoized and shared by d07/d09") {
-    Similarity.evictKnnMemo(spark)
+    SessionScope.evict(spark)
     val d07 = graft.SparkEntry.queries("d07_dedup_pipeline")(spark, sf)
       .select("doc_a", "doc_b").collect().map(_.toSeq).toSet
     spark.sharedState.cacheManager.clearCache()
@@ -85,6 +86,6 @@ class SharedBuildMemoSpec extends SparkSuite {
     val clustered = reps.filter("doc_id <> cluster_rep").count()
     assert(clustered > 0, "fixture must contain at least one near-dup pair")
     assert(d07.nonEmpty)
-    Similarity.evictKnnMemo(spark)
+    SessionScope.evict(spark)
   }
 }

@@ -178,9 +178,9 @@ class SimilaritySpec extends SparkSuite {
     assert(nLive == expected, s"n_live $nLive != surviving corpus $expected")
     // and the files themselves are clean: re-read the compacted index
     // from the query's session-unique artifact path (resolving via
-    // ArtifactRoot is the r19 contract — reconstructing the pre-r19
+    // SessionScope.artifactPath is the r19 contract — reconstructing the pre-r19
     // fixed tmpdir string here silently read stale pre-migration files)
-    val path = graft.core.ArtifactRoot.path(
+    val path = graft.core.SessionScope.artifactPath(
       spark, "s24", "/root/testdata/sf0.001")
     val ghosts = spark.read.parquet(path + "/enc")
       .filter(col("vec_id") % 10 === 3).count()

@@ -34,7 +34,7 @@ class ZOrderSpec extends SparkSuite {
     assume(new java.io.File(s"$sf/lineitem.parquet").exists())
     // (re)write the z-clustered files exactly as c22 lays them out
     graft.ext.Curation.queries("c22_zorder_layout")(spark, sf).collect()
-    val zpath = graft.core.ArtifactRoot.path(spark, "c22_zorder", sf)
+    val zpath = graft.core.SessionScope.artifactPath(spark, "c22_zorder", sf)
     val total = spark.read.parquet(zpath).count()
     // post-execution scan metric: rows SURVIVING parquet row-group
     // pruning (pushed min/max stats), before Spark's residual Filter

@@ -930,7 +930,7 @@ class StreamingParitySpec extends SparkSuite {
     // t26's serving form: the sqrt-idf impacts index and the embedding
     // table are FROZEN (built in batch, as in production retrieval);
     // probe DOCUMENTS arrive live and each micro-batch runs the
-    // identical hybridRerank definition. Every per-probe quantity
+    // identical hybridRerankManaged definition. Every per-probe quantity
     // (slate, min-max normalizer, blend) derives only from the probe's
     // own rows, so the union over any batching equals the one-shot run.
     import graft.ext.{Similarity, TextAnalysis}
@@ -941,9 +941,11 @@ class StreamingParitySpec extends SparkSuite {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", Similarity.dot(col("v"), col("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val batch = TextAnalysis.hybridRerank(
+    val batch = {
+      val (df, cleanup) = TextAnalysis.hybridRerankManaged(
         TextAnalysis.bm25ProbeTerms(docs), post, emb)
-      .collect().map(_.toSeq).toSet
+      try df.collect().map(_.toSeq).toSet finally cleanup()
+    }
     assert(batch.nonEmpty, "batch reranked no probes at sf0.001")
     val root = Files.createTempDirectory("graft-t26-stream").toString
     docs.filter(col("doc_id") % 100 === 0).repartition(3)
@@ -1020,9 +1022,11 @@ class StreamingParitySpec extends SparkSuite {
       .withColumn("nrm", Similarity.dot(col("v"), col("v")))
       .persist(MEMORY_AND_DISK)
     val probes = docs.filter(col("doc_id") % 100 === 0)
-    def rerank(p: DataFrame): Set[Seq[Any]] =
-      TextAnalysis.hybridRerank(TextAnalysis.bm25ProbeTerms(p), post, emb)
-        .collect().map(_.toSeq).toSet
+    def rerank(p: DataFrame): Set[Seq[Any]] = {
+      val (df, cleanup) = TextAnalysis.hybridRerankManaged(
+        TextAnalysis.bm25ProbeTerms(p), post, emb)
+      try df.collect().map(_.toSeq).toSet finally cleanup()
+    }
     val oneShot = rerank(probes)
     assert(oneShot.nonEmpty)
     val evalIds = probes.select("doc_id").collect().map(_.getLong(0)).sorted
@@ -1092,7 +1096,7 @@ class StreamingParitySpec extends SparkSuite {
   test("RRF fusion serves arriving probe docs per micro-batch against the frozen index + embeddings (t28)") {
     // t28's serving form, same frame as the t26 twin: the sqrt-idf
     // impacts index and embedding table are FROZEN; probe documents
-    // arrive live and each micro-batch runs the identical rrfFusion
+    // arrive live and each micro-batch runs the identical rrfFusionManaged
     // definition. Both rank arms partition by eval_id — rank-space
     // fusion carries no cross-probe state at all (not even a
     // normalizer), so the union over any batching equals the one-shot
@@ -1110,7 +1114,7 @@ class StreamingParitySpec extends SparkSuite {
       // managed form everywhere a caller materializes-then-moves-on: the
       // serving loop below runs one fusion per micro-batch and MUST
       // reclaim the per-call persisted frame (the r17 verdict's hygiene
-      // defect — rrfFusion used to persist with no handle)
+      // defect — the fusion used to persist with no handle)
       val (df, cleanup) = TextAnalysis.rrfFusionManaged(p, post, emb)
       val out = df.collect().map(_.toSeq).toSet
       cleanup()
@@ -1262,7 +1266,7 @@ class StreamingParitySpec extends SparkSuite {
       .persist(MEMORY_AND_DISK)
     val q29 = graft.SparkEntry.queries("t29_rrf_served")(spark, sf)
       .collect().map(_.toSeq).toSet
-    graft.core.QueryCleanup.drain(spark)
+    graft.core.SessionScope.drain(spark)
     // nightly build, MEMOIZED per (session, dataset) since r19: these
     // are the very frames/files the oracle-checked query above served
     // from — no rebuild, so the pre-r19 ordering hazard (an overwrite
@@ -1355,8 +1359,11 @@ class StreamingParitySpec extends SparkSuite {
       .select(col("eval_id").cast("long"), col("rank"), col("train_id"),
         col("bm25"), col("cos_sim"), col("blend"))
       .collect().map(_.toSeq).toSet
-    val oneShot = norm(TextAnalysis.hybridRerank(
-      TextAnalysis.bm25ProbeTerms(docs), post, emb))
+    val oneShot = {
+      val (df, cleanup) = TextAnalysis.hybridRerankManaged(
+        TextAnalysis.bm25ProbeTerms(docs), post, emb)
+      try norm(df) finally cleanup()
+    }
     assert(oneShot.nonEmpty, "one-shot rerank produced no slate rows")
     // a probe's slate is immutable once served: the remerge just
     // deduplicates identical (eval, rank) rows a replay re-presents
