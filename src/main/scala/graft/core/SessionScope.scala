@@ -4,7 +4,8 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Everything graft keeps per SparkSession, owned in one place:
   *
@@ -23,12 +24,12 @@ import org.apache.spark.sql.SparkSession
   *    A fixed per-dataset path let two sessions overwrite part files
   *    under each other's open lazy reads; a per-session root closes that
   *    across sessions and JVMs. A JVM shutdown hook deletes the tree.
-  *  - [[defer]] / [[drain]]: cleanup handles of the managed catalog
-  *    queries (t26–t31). A catalog lambda returns only its DataFrame and
-  *    the runner materializes it later, so the lambda defers its
-  *    unpersist handle and every runner (Verify, Bench, QueryTimer,
-  *    CpuProbe, `SparkSuite.withFixture`) drains after each query.
-  *    Handles must be idempotent and safe after `clearCache`.
+  *  - [[cache]] / [[drain]]: per-call persists of the retrieval family
+  *    (t26–t31 and their serving twins). A catalog lambda returns only
+  *    its DataFrame and the runner materializes it later, so `cache`
+  *    persists the frame and holds its unpersist until every runner
+  *    (Verify, Bench, QueryTimer, CpuProbe, `SparkSuite.withFixture`, a
+  *    serving loop after each batch) drains the session.
   *
   * Lifecycle: a session's state is dropped when its SparkContext ends
   * (one listener per context) or on [[evict]], which a pool of
@@ -84,16 +85,25 @@ object SessionScope {
   def artifactPath(s: SparkSession, family: String, d: String): String =
     state(s).root + "/" + family + "_" + d.replaceAll("[^A-Za-z0-9]", "_")
 
+  /** `df` persisted at MEMORY_AND_DISK until the next [[drain]] of
+    * `df.sparkSession`. The unpersist does not block, so it is safe on a
+    * frame already dropped by `clearCache`. */
+  def cache(df: DataFrame): DataFrame = {
+    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+    defer(p.sparkSession, () => { p.unpersist(false); () })
+    p
+  }
+
   /** Defer `f` until the next [[drain]] of `s`. */
-  def defer(s: SparkSession, f: () => Unit): Unit = {
+  private[core] def defer(s: SparkSession, f: () => Unit): Unit = {
     val p = state(s).pending
     p.synchronized { p += f }
     ()
   }
 
-  /** Run and discard every handle deferred for `s`; returns how many
-    * ran. Failures are swallowed — cleanup must never fail a query whose
-    * result already materialized. */
+  /** Run and discard every handle deferred for `s` (each [[cache]]d
+    * frame's unpersist); returns how many ran. Failures are swallowed —
+    * cleanup must never fail a query whose result already materialized. */
   def drain(s: SparkSession): Int = states.get(s).fold(0)(run)
 
   private def run(st: State): Int = {

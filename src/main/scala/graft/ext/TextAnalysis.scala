@@ -370,7 +370,7 @@ object TextAnalysis {
     * definition runs on a batch table or a live probe micro-batch. A
     * null-text probe tokenizes to zero rows (both engines agree:
     * `explode(null)` and `unnest(NULL)` drop the row) — which is why the
-    * VECTOR-arm probe universe in [[rrfFusionManaged]] must come from
+    * VECTOR-arm probe universe in [[rrfVecArmBrute]] must come from
     * probe IDS, never from this frame. */
   private[graft] def probeTermsOf(probes: DataFrame): DataFrame =
     probes.select(col("doc_id").as("eval_id"),
@@ -405,46 +405,42 @@ object TextAnalysis {
   private[graft] val sqrtIdf: (Column, Column) => Column =
     (nTrain, df) => sqrt(nTrain.cast("double") / df.cast("double"))
 
-  /** t26's rerank on arbitrary pre-shaped frames — `probeTerms` as
-    * `(eval_id, t)` (from [[bm25ProbeTerms]]), `post` a FROZEN impacts
-    * index `(t, train_id, fx)`, `emb` as `(vec_id, v, nrm)` — factored so
-    * the serving twin can run the identical definition per micro-batch of
-    * ARRIVING probe documents against the static index + embedding table.
-    * Every per-probe quantity (slate, min-max normalizer, blend) derives
-    * only from that probe's own rows, so the union over any probe
-    * batching equals the one-shot batch run.
+  /** Probe terms `(eval_id, t)` scored against a frozen impacts index,
+    * [[SessionScope.cache]]d until the session's next drain: the scored
+    * input of the pipelines below when the probes are not the session
+    * constant (a serving micro-batch, a spec's constructed corpus). The
+    * catalog lambdas pass [[probeScoredMemo]] instead. Persisted for
+    * t16's reason: TopK's range-partitioner sampling replays its input
+    * once more than you'd expect. */
+  private[graft] def probeScored(post: DataFrame, probeTerms: DataFrame): DataFrame =
+    SessionScope.cache(bm25Scores(post, probeTerms))
+
+  /** [[rrfLexArm]] over the [[probeScored]] terms of a frame of probe
+    * DOCUMENTS (`doc_id`, `text`) — the per-call lexical arm of the
+    * fusion twins and specs; the catalog lambdas pass [[rrfLexArmMemo]]. */
+  private[graft] def probeLexArm(post: DataFrame, probes: DataFrame): DataFrame =
+    rrfLexArm(probeScored(post, probeTermsOf(probes)))
+
+  /** t26's rerank over a scored frame `(eval_id, train_id, sfx)` and
+    * `emb` as `(vec_id, v, nrm)`. The catalog lambda passes
+    * [[probeScoredMemo]]; the serving twin passes [[probeScored]] of each
+    * micro-batch of ARRIVING probe documents against the static index +
+    * embedding table. Every per-probe quantity (slate, min-max
+    * normalizer, blend) derives only from that probe's own rows, so the
+    * union over any probe batching equals the one-shot batch run.
     *
-    * Returns a cleanup handle that unpersists the two intermediate
-    * frames (`scored`, `cand`) it caches per call. The catalog lambda
-    * defers its handle to the runner via [[SessionScope.defer]] (the
-    * runner materializes the frame after the lambda returns — r18
-    * ADVICE: Bench's no-clear reps mode otherwise accumulated the
-    * per-call persists); every other caller — a serving loop, one
-    * rerank per micro-batch — invokes the handle after materializing
-    * the result. Unpersist is non-blocking: the frames are dead by then,
-    * eviction can lag the next batch safely. */
-  private[graft] def hybridRerankManaged(
-      probeTerms: DataFrame, post: DataFrame,
-      emb: DataFrame): (DataFrame, () => Unit) = {
-    val (joint, cleanup) = rerankJointScores(probeTerms, post, emb)
-    (rankHybridJoint(joint), cleanup)
-  }
-
-  /** [[hybridRerankManaged]] downstream of an already-materialized
-    * scored frame — the t26 catalog lambda passes [[probeScoredMemo]]. */
-  private[graft] def hybridRerankFromScored(
-      scored: DataFrame, emb: DataFrame): (DataFrame, () => Unit) = {
-    val (joint, cleanup) = rerankJointScoresFrom(scored, emb)
-    (rankHybridJoint(joint), cleanup)
-  }
-
-  /** t26's final blended slate over the joint-scoring frame. */
-  private def rankHybridJoint(joint: DataFrame): DataFrame = {
-    val s = joint.sparkSession
+    * Per-call persists go through [[SessionScope.cache]]: the runner
+    * materializes the frame after the lambda returns, then drains (r18
+    * ADVICE: Bench's no-clear reps mode otherwise accumulated them); a
+    * serving loop drains after materializing each batch. Unpersist is
+    * non-blocking: the frames are dead by then, eviction can lag the
+    * next batch safely. */
+  private[graft] def hybridRerank(scored: DataFrame, emb: DataFrame): DataFrame = {
+    val s = scored.sparkSession
     import s.implicits._
     graft.operators.TopK.perKey(
-        joint, $"eval_id", Seq($"bfx".desc, $"train_id"), 5,
-        saltFrom = $"train_id")
+        rerankJointScores(scored, emb), $"eval_id",
+        Seq($"bfx".desc, $"train_id"), 5, saltFrom = $"train_id")
       .select($"eval_id", $"rn".as("rank"), $"train_id",
         round($"sfx".cast("double") / lit(1e6), 6).as("bm25"),
         round($"cfx".cast("double") / lit(1e6), 6).as("cos_sim"),
@@ -456,39 +452,20 @@ object TextAnalysis {
     * `(eval_id, train_id, sfx, cfx, bfx)` for each of the ≤10 stage-1
     * candidates per probe — lexical fixed-point sum, cosine fixed-point,
     * and the min-max-normalized integer blend. Factored out of
-    * [[hybridRerankManaged]] so the recall census can rank the SAME rows
+    * [[hybridRerank]] so the recall census can rank the SAME rows
     * two ways (by blend = the slate, by cosine alone = the in-slate
-    * ground truth) without duplicating the scoring definition. */
-  private[graft] def rerankJointScores(
-      probeTerms: DataFrame, post: DataFrame,
-      emb: DataFrame): (DataFrame, () => Unit) = {
-    // persisted for the same reason as t16 (TopK's exchange replays its
-    // input once more than you'd expect under the final orderBy's
-    // range-partitioner sampling job)
-    val scored = bm25Scores(post, probeTerms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (blended, inner) = rerankJointScoresFrom(scored, emb)
-    (blended, () => { inner(); scored.unpersist(false); () })
-  }
-
-  /** [[rerankJointScores]] downstream of an ALREADY-MATERIALIZED scored
-    * frame — the catalog queries pass the per-(session, dataset)
-    * memoized probe scoring ([[probeScoredMemo]]), so only the per-call
-    * candidate slate persists here; the generic probe-frame entry above
-    * (the serving twins' per-micro-batch path) builds and owns its own
-    * scored frame. */
-  private[graft] def rerankJointScoresFrom(
-      scored: DataFrame, emb: DataFrame): (DataFrame, () => Unit) = {
+    * ground truth) without duplicating the scoring definition. Only the
+    * candidate slate is cached per call. */
+  private[graft] def rerankJointScores(scored: DataFrame, emb: DataFrame): DataFrame = {
     val s = scored.sparkSession
     import s.implicits._
     // stage-1 cut: top-10 lexical candidates per probe — referenced
     // three times below (embedding fetch, eval-id set, min-max stats),
-    // so persist the 10·n_eval-row frame rather than replay retrieval
-    val cand = graft.operators.TopK.perKey(
+    // so cache the 10·n_eval-row frame rather than replay retrieval
+    val cand = SessionScope.cache(graft.operators.TopK.perKey(
         scored, $"eval_id", Seq($"sfx".desc, $"train_id"), 10,
         saltFrom = $"train_id")
-      .select($"eval_id", $"train_id", $"sfx")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select($"eval_id", $"train_id", $"sfx"))
     // candidate-local min-max PER PROBE (not the corpus, not the batch:
     // rerank normalizers must come from the slate actually shown — a
     // batch-pooled normalizer would make output depend on which probes
@@ -508,12 +485,11 @@ object TextAnalysis {
         round(($"sfx" - $"mn").cast("double") /
           ($"mx" - $"mn").cast("double") * lit(1e6)).cast("long"))
       .otherwise(lit(500000L))
-    val blended = te.join(broadcast(ev), Seq("eval_id"))
+    te.join(broadcast(ev), Seq("eval_id"))
       .select($"eval_id", $"train_id", $"sfx", cfx.as("cfx"))
       .join(broadcast(mm), Seq("eval_id"))
       .select($"eval_id", $"train_id", $"sfx", $"cfx",
         (nbFx + $"cfx").as("bfx"))
-    (blended, () => { cand.unpersist(false); () })
   }
 
   /** t27's recall census for the hybrid pipeline — the standard ablation
@@ -550,22 +526,19 @@ object TextAnalysis {
     * the t27 catalog lambda passes the memoized joint inputs and the
     * top-5 PREFIX of the memoized brute top-10 rank list (the salted
     * TopK at k=5 is exactly the first 5 rows of the same total order at
-    * k=10, so the set is identical). Persists the per-call joint/slate
-    * pair (ranked twice); the handle unpersists them. */
-  private[graft] def rerankRecallCore(
-      jointRaw: DataFrame, exact: DataFrame,
-      emb: DataFrame): (DataFrame, () => Unit) = {
+    * k=10, so the set is identical). Caches the per-call joint/slate
+    * pair (ranked twice). */
+  private[graft] def rerankRecall(
+      jointRaw: DataFrame, exact: DataFrame, emb: DataFrame): DataFrame = {
     val s = jointRaw.sparkSession
     import s.implicits._
-    // ≤10 rows per probe, ranked twice below — persist the tiny frame
+    // ≤10 rows per probe, ranked twice below — cache the tiny frame
     // rather than replay stage-1 retrieval per ranking
-    val joint = jointRaw
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val slate = graft.operators.TopK.perKey(
+    val joint = SessionScope.cache(jointRaw)
+    val slate = SessionScope.cache(graft.operators.TopK.perKey(
         joint, $"eval_id", Seq($"bfx".desc, $"train_id"), 5,
         saltFrom = $"train_id")
-      .select($"eval_id", $"train_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select($"eval_id", $"train_id"))
     val candTop = graft.operators.TopK.perKey(
         joint, $"eval_id", Seq($"cfx".desc, $"train_id"), 5,
         saltFrom = $"train_id")
@@ -577,7 +550,7 @@ object TextAnalysis {
       .groupBy($"eval_id").agg(count(lit(1)).as("corpus_hits"))
     val hk = slate.join(candTop, Seq("eval_id", "train_id"))
       .groupBy($"eval_id").agg(count(lit(1)).as("cand_hits"))
-    val out = evV.distinct()
+    evV.distinct()
       .join(ns, Seq("eval_id"), "left")
       .join(hc, Seq("eval_id"), "left")
       .join(hk, Seq("eval_id"), "left")
@@ -590,9 +563,6 @@ object TextAnalysis {
         round(coalesce($"cand_hits", lit(0L)).cast("double") / lit(5.0), 6)
           .as("cand_recall"))
       .orderBy($"eval_id")
-    (out, () => {
-      joint.unpersist(false); slate.unpersist(false); ()
-    })
   }
 
   /** The rank-space fusion CORE shared by t28 (brute-force vector arm)
@@ -605,7 +575,14 @@ object TextAnalysis {
     * oracle-checked brute-force t28 run the same fusion operator, so
     * proving one proves the other's combiner. The join touches two
     * ≤rank-depth-rows-per-probe frames — nothing here scales with the
-    * corpus. */
+    * corpus.
+    *
+    * The catalog lambdas pass the memoized arms; a serving twin passes
+    * [[probeLexArm]] and [[rrfVecArmBrute]] (or the served arm) of each
+    * micro-batch of arriving probe documents. Both arms rank PER PROBE,
+    * so the union over any probe batching equals the one-shot batch run
+    * — rank-space fusion has no cross-probe state at all, not even a
+    * normalizer. */
   private[graft] def rrfFuseRanks(lex: DataFrame, vec: DataFrame): DataFrame = {
     val s = lex.sparkSession
     import s.implicits._
@@ -638,39 +615,19 @@ object TextAnalysis {
       .select($"eval_id", $"train_id", $"rn".cast("long").as("lex_rank"))
   }
 
-  /** t28's reciprocal-rank fusion over a frame of probe DOCUMENTS
-    * (`doc_id`, `text`) against a FROZEN impacts index and embedding
-    * table — factored like [[hybridRerankManaged]] so a serving twin can
-    * run the identical definition per micro-batch of arriving probes. Both
-    * arms rank PER PROBE (the lexical TopK and the vector TopK each
-    * partition by eval_id), so the union over any probe batching equals
-    * the one-shot batch run — rank-space fusion has no cross-probe
-    * state at all, not even a normalizer.
-    *
-    * The signature takes the probe DOCS (not pre-tokenized terms — the
-    * r17 ADVICE): the vector-arm probe universe derives from probe IDS
-    * joined to the embedding table, structurally matching the oracle's
-    * `vec_id % 100 = 0` under the canary-pinned embeddings ⊆ documents
-    * invariant, so a probe whose text tokenizes to NOTHING (null text)
-    * still fuses its vector arm instead of silently vanishing.
-    *
-    * Returns a cleanup handle that unpersists the one intermediate frame
-    * (`scored`) it caches per call — a long-running serving loop must
-    * call it after materializing each micro-batch's slate, or per-batch
-    * cache entries accumulate bounded only by LRU pressure (the r17
-    * verdict's hygiene defect). */
-  private[graft] def rrfFusionManaged(
-      probes: DataFrame, post: DataFrame,
-      emb: DataFrame): (DataFrame, () => Unit) =
-    rrfFusedWithArmManaged(probes, post, rrfVecArmBrute(probes, emb))
-
   /** t28's BRUTE-FORCE vector arm: per-probe top-10 exact-cosine rank
     * list over the embedded train corpus — `(eval_id, train_id,
-    * vec_rank)`, s01's broadcast-probes-into-one-scan shape. The probe
-    * universe is the probe IDS that have an embedding (see
-    * [[rrfFusionManaged]]). t29 swaps this arm for the SAVED-index serve
+    * vec_rank)`, s01's broadcast-probes-into-one-scan shape. t29 swaps
+    * this arm for the SAVED-index serve
     * ([[Similarity.ivfpqServedTrainRanks]]) — same frame shape, same
-    * fusion core. */
+    * fusion core.
+    *
+    * It takes the probe DOCS, not pre-tokenized terms (the r17 ADVICE):
+    * the probe universe is the probe IDS joined to the embedding table,
+    * structurally matching the oracle's `vec_id % 100 = 0` under the
+    * canary-pinned embeddings ⊆ documents invariant, so a probe whose
+    * text tokenizes to NOTHING (null text) still fuses its vector arm
+    * instead of silently vanishing. */
   private[graft] def rrfVecArmBrute(probes: DataFrame,
                                     emb: DataFrame): DataFrame = {
     val s = emb.sparkSession
@@ -711,8 +668,9 @@ object TextAnalysis {
     * consumers broadcast the probe-sized side, and [[rrfFuseRanks]]'s
     * full-outer join (which cannot broadcast) exchanges two tiny
     * frames of at most rank-depth rows per probe. The
-    * serving twins keep the generic probe-frame entry points — a
-    * micro-batch's probes are not the session constant. */
+    * serving twins build the same inputs per call ([[probeScored]],
+    * [[probeLexArm]]) — a micro-batch's probes are not the session
+    * constant. */
   private[graft] def probeScoredMemo(s: SparkSession, d: String): DataFrame =
     SessionScope.memo(s, d, "bm25sc_sq") {
       bm25Scores(bm25ImpactsIdfMemoTf(s, d, sqrtIdf),
@@ -754,22 +712,6 @@ object TextAnalysis {
         .localCheckpoint()
     }
 
-  /** The ONE fusion pipeline both t28 and t29 run: lexical retrieval
-    * ranks from the frozen impacts index fused with a SUPPLIED vector
-    * rank arm through [[rrfFuseRanks]]. t28 passes the brute-force arm,
-    * t29 the saved-IVF-PQ-served arm — proving the served composition
-    * exercises the identical combiner the oracle checks on t28. */
-  private[graft] def rrfFusedWithArmManaged(
-      probes: DataFrame, post: DataFrame,
-      vecArm: DataFrame): (DataFrame, () => Unit) = {
-    // persisted for t16's reason: TopK's range-partitioner sampling
-    // replays its input once more than you'd expect
-    val scored = bm25Scores(post, probeTermsOf(probes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (rrfFuseRanks(rrfLexArm(scored), vecArm),
-      () => { scored.unpersist(false); () })
-  }
-
   /** t30's recall census for the SERVED fusion — t27's ablation
     * discipline applied to the index swap: per embedded eval probe,
     *  - `fusion_recall`: overlap@5 of t29's served-fusion slate with
@@ -779,49 +721,27 @@ object TextAnalysis {
     *    cosine rank list — the ARM-level recall (s06's discipline on
     *    the IVF-PQ serve) that explains the slate divergence.
     * The lexical arm and the [[rrfFuseRanks]] core are SHARED between
-    * the two fusions (built once here), so any divergence is
-    * attributable to the vector arm alone. Universe: embedded eval
-    * probes, LEFT-joined with sentinel zeros (c26's vanished-row
-    * lesson). Scale shape: one lexical retrieval, one brute-force rank
-    * pass (the irreducible exact-ground-truth cost, s01's scan-parallel
-    * shape), one served rank pass (cell-local), and intersections over
-    * ≤10-rows-per-probe frames. */
-  private[graft] def servedFusionRecallManaged(
-      probes: DataFrame, post: DataFrame, emb: DataFrame,
-      vecServed: DataFrame): (DataFrame, () => Unit) = {
-    val s = post.sparkSession
-    import s.implicits._
-    val scored = bm25Scores(post, probeTermsOf(probes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lex = rrfLexArm(scored)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val vecExact = rrfVecArmBrute(probes, emb)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val exactSlate = rrfFuseRanks(lex, vecExact)
-      .select($"eval_id", $"train_id")
-    val (out, core) =
-      servedFusionRecallCore(lex, exactSlate, vecExact, vecServed, emb)
-    (out, () => {
-      core(); scored.unpersist(false); lex.unpersist(false)
-      vecExact.unpersist(false); ()
-    })
-  }
-
-  /** The census downstream of PRE-BUILT lexical arm / exact slate /
-    * exact rank arm (the t30 catalog lambda passes the per-(session,
-    * dataset) memos; the generic probe-frame entry above builds and owns
-    * its own). Persists only the genuinely per-call frames — the served
-    * arm and the served slate. */
-  private[graft] def servedFusionRecallCore(
+    * the two fusions, so any divergence is attributable to the vector
+    * arm alone. Universe: embedded eval probes, LEFT-joined with
+    * sentinel zeros (c26's vanished-row lesson). Scale shape: one
+    * lexical retrieval, one brute-force rank pass (the irreducible
+    * exact-ground-truth cost, s01's scan-parallel shape), one served
+    * rank pass (cell-local), and intersections over ≤10-rows-per-probe
+    * frames.
+    *
+    * Runs downstream of PRE-BUILT lexical arm / exact slate `(eval_id,
+    * train_id)` / exact rank arm: the t30 catalog lambda passes the
+    * per-(session, dataset) memos, a spec its per-call cached arms.
+    * Caches only the genuinely per-call frames — the served arm and the
+    * served slate. */
+  private[graft] def servedFusionRecall(
       lex: DataFrame, exactSlate: DataFrame, vecExact: DataFrame,
-      vecServed: DataFrame, emb: DataFrame): (DataFrame, () => Unit) = {
+      vecServed: DataFrame, emb: DataFrame): DataFrame = {
     val s = lex.sparkSession
     import s.implicits._
-    val vecSrv = vecServed
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val servedSlate = rrfFuseRanks(lex, vecSrv)
-      .select($"eval_id", $"train_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val vecSrv = SessionScope.cache(vecServed)
+    val servedSlate = SessionScope.cache(rrfFuseRanks(lex, vecSrv)
+      .select($"eval_id", $"train_id"))
     val evU = emb.filter($"vec_id" % 100 === 0)
       .select($"vec_id".as("eval_id"))
     val ns = servedSlate.groupBy($"eval_id").agg(count(lit(1)).as("n_served"))
@@ -831,7 +751,7 @@ object TextAnalysis {
       .join(vecExact.select($"eval_id", $"train_id"),
         Seq("eval_id", "train_id"))
       .groupBy($"eval_id").agg(count(lit(1)).as("arm_hits"))
-    val out = evU
+    evU
       .join(ns, Seq("eval_id"), "left")
       .join(fh, Seq("eval_id"), "left")
       .join(ah, Seq("eval_id"), "left")
@@ -844,9 +764,6 @@ object TextAnalysis {
         round(coalesce($"arm_hits", lit(0L)).cast("double") / lit(10.0), 6)
           .as("arm_recall"))
       .orderBy($"eval_id")
-    (out, () => {
-      vecSrv.unpersist(false); servedSlate.unpersist(false); ()
-    })
   }
 
   /** NDCG@5 discount weights as INTEGER fixed-point millionths —
@@ -883,44 +800,19 @@ object TextAnalysis {
     * one exact rank pass (the irreducible ground-truth cost), one
     * served rank pass (cell-local), then grading joins over
     * ≤5-rows-per-probe slates; nothing downstream of the arms scales
-    * with the corpus. */
-  private[graft] def servedRankingMetricsManaged(
-      probes: DataFrame, post: DataFrame, emb: DataFrame,
-      vecServed: DataFrame): (DataFrame, () => Unit) = {
-    val s = post.sparkSession
-    import s.implicits._
-    val scored = bm25Scores(post, probeTermsOf(probes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lex = rrfLexArm(scored)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the arms are each consumed once here, but the fusion's TopK
-    // range-partitioner sampling replays its input (t16's lesson), and
-    // the brute exact arm is the expensive one — persist both, as t30
-    val vecExact = rrfVecArmBrute(probes, emb)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // persisted: the exact slate feeds BOTH the IDCG aggregate and the
-    // graded join
-    val exactSlate = rrfFuseRanks(lex, vecExact)
-      .select($"eval_id", $"train_id", $"rank".cast("long").as("exact_rank"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (out, core) =
-      servedRankingMetricsCore(lex, exactSlate, vecServed, emb)
-    (out, () => {
-      core(); scored.unpersist(false); lex.unpersist(false)
-      vecExact.unpersist(false); exactSlate.unpersist(false); ()
-    })
-  }
-
-  /** The grading downstream of PRE-BUILT lexical arm / graded exact
-    * slate `(eval_id, train_id, exact_rank)` — the t31 catalog lambda
-    * passes the memos; only the served arm persists per call. */
-  private[graft] def servedRankingMetricsCore(
+    * with the corpus.
+    *
+    * Runs downstream of PRE-BUILT lexical arm / graded exact slate
+    * `(eval_id, train_id, exact_rank)`: the t31 catalog lambda passes the
+    * memos; a spec passes its per-call cached arms, and caches the exact
+    * slate too, since it feeds BOTH the IDCG aggregate and the graded
+    * join. Only the served arm is cached here. */
+  private[graft] def servedRankingMetrics(
       lex: DataFrame, exactSlate: DataFrame, vecServed: DataFrame,
-      emb: DataFrame): (DataFrame, () => Unit) = {
+      emb: DataFrame): DataFrame = {
     val s = lex.sparkSession
     import s.implicits._
-    val vecSrv = vecServed
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val vecSrv = SessionScope.cache(vecServed)
     val servedSlate = rrfFuseRanks(lex, vecSrv)
       .select($"eval_id", $"train_id", $"rank".cast("long").as("srv_rank"))
     val graded = servedSlate
@@ -936,7 +828,7 @@ object TextAnalysis {
       sum((lit(6L) - $"exact_rank") * ndcgW($"exact_rank")).as("idcg"))
     val evU = emb.filter($"vec_id" % 100 === 0)
       .select($"vec_id".as("eval_id"))
-    val out = evU
+    evU
       .join(idcg, Seq("eval_id"), "left")
       .join(dcg, Seq("eval_id"), "left")
       .select($"eval_id",
@@ -952,7 +844,6 @@ object TextAnalysis {
           round(lit(1.0) / $"first_hit".cast("double"), 6))
           .otherwise(lit(0.0)).as("mrr"))
       .orderBy($"eval_id")
-    (out, () => { vecSrv.unpersist(false); () })
   }
 
   /** t12/t14/t25's shared BPE training (r19, guide §2.4): the round-`i`
@@ -1614,23 +1505,16 @@ object TextAnalysis {
     // top-5 is the salted TopK over ≤10 rows per key.
     "t26_hybrid_rerank" -> { (s, d) =>
       // the dense probe scoring is the memoized session constant (r20);
-      // only the per-call candidate slate persists here.
-      // a catalog lambda cannot invoke the cleanup handle itself (the
-      // runner materializes the frame after we return) — defer it so
-      // the runner drains it post-materialization (SessionScope; the
-      // r18 ADVICE: Bench's no-clear reps mode otherwise accumulates
-      // each managed query's per-call persists under LRU pressure only)
-      val (out, cleanup) =
-        hybridRerankFromScored(probeScoredMemo(s, d), embWithNorms(s, d))
-      SessionScope.defer(s, cleanup)
-      out
+      // only the per-call candidate slate is cached, until the runner's
+      // drain after it materializes the frame
+      hybridRerank(probeScoredMemo(s, d), embWithNorms(s, d))
     },
 
     // Recall census for the hybrid retrieve-then-rerank pipeline — the
     // quality ablation every two-stage retriever ships with: per
     // embedded eval probe, recall@5 of t26's blended slate vs (a) the
     // corpus-wide brute-force cosine top-5 and (b) the cosine-only
-    // top-5 of the slate's own candidate set. See [[rerankRecallCore]] for
+    // top-5 of the slate's own candidate set. See [[rerankRecall]] for
     // the full framing (why the corpus arm is honestly ~0 on random
     // synthetic embeddings and the candidate arm carries the hash
     // teeth).
@@ -1639,14 +1523,11 @@ object TextAnalysis {
       val emb = embWithNorms(s, d)
       // memoized joint inputs + the exact arm as the top-5 prefix of the
       // memoized brute top-10 (identical set — same total order);
-      // cleanup deferred to the runner's drain (see t26)
-      val (joint, jointCleanup) =
-        rerankJointScoresFrom(probeScoredMemo(s, d), emb)
+      // per-call caches drained by the runner (see t26)
+      val joint = rerankJointScores(probeScoredMemo(s, d), emb)
       val exact = rrfVecExactMemo(s, d).filter($"vec_rank" <= 5)
         .select($"eval_id", $"train_id")
-      val (out, core) = rerankRecallCore(joint, exact, emb)
-      SessionScope.defer(s, () => { core(); jointCleanup() })
-      out
+      rerankRecall(joint, exact, emb)
     },
 
     // Reciprocal-rank fusion — the OTHER standard hybrid-search
@@ -1676,7 +1557,7 @@ object TextAnalysis {
       // both arms are the memoized session constants (r20): the fusion
       // itself is a full-outer join of two ≤10-rows-per-probe
       // checkpointed frames + the salted top-5 — no per-call persists,
-      // so nothing to defer to SessionScope
+      // so nothing to cache
       rrfFuseRanks(rrfLexArmMemo(s, d), rrfVecExactMemo(s, d))
     },
 
@@ -1704,11 +1585,9 @@ object TextAnalysis {
       // the lexical arm is the memoized session constant; the served arm
       // rides the MEMOIZED train index (one build per session serves
       // t29, t30, t31 and the twins — r18 verdict ask #1) and persists
-      // per call (the fusion's TopK + final sort replay their input);
-      // cleanup deferred to the runner's drain (see t26)
-      val vecSrv = Similarity.ivfpqServedTrainRanks(s, d, 10)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      SessionScope.defer(s, () => { vecSrv.unpersist(false); () })
+      // per call (the fusion's TopK + final sort replay their input)
+      // until the runner's drain (see t26)
+      val vecSrv = SessionScope.cache(Similarity.ivfpqServedTrainRanks(s, d, 10))
       rrfFuseRanks(rrfLexArmMemo(s, d), vecSrv)
     },
 
@@ -1726,16 +1605,14 @@ object TextAnalysis {
     "t30_served_fusion_recall" -> { (s, d) =>
       import s.implicits._
       // lexical arm, exact slate and exact rank arm are the memoized
-      // session constants; shares t29's memoized index build; cleanup
-      // (served arm + served slate) deferred to the runner's drain
-      val (out, cleanup) = servedFusionRecallCore(
+      // session constants; shares t29's memoized index build; the served
+      // arm + served slate are cached until the runner's drain
+      servedFusionRecall(
         rrfLexArmMemo(s, d),
         rrfExactSlateMemo(s, d).select($"eval_id", $"train_id"),
         rrfVecExactMemo(s, d),
         Similarity.ivfpqServedTrainRanks(s, d, 10),
         embWithNorms(s, d))
-      SessionScope.defer(s, cleanup)
-      out
     },
 
     // The served composition's RANK-AWARE grading — the companion t30's
@@ -1747,21 +1624,19 @@ object TextAnalysis {
     // precomputed integer millionths (ndcgW — no cross-engine log), so
     // DCG and IDCG are exact BIGINT sums and the only doubles are two
     // guarded 6-dp-rounded divisions. Shares t29/t30's memoized index
-    // build and the one-per-session BM25 tokenization; cleanup deferred
-    // to the runner's drain (see t26).
+    // build and the one-per-session BM25 tokenization; the served arm is
+    // cached until the runner's drain (see t26).
     "t31_ranking_metrics" -> { (s, d) =>
       import s.implicits._
       // memoized lexical arm + graded exact slate; shares t29's memoized
-      // index build; cleanup (served arm) deferred to the runner's drain
-      val (out, cleanup) = servedRankingMetricsCore(
+      // index build
+      servedRankingMetrics(
         rrfLexArmMemo(s, d),
         rrfExactSlateMemo(s, d)
           .select($"eval_id", $"train_id",
             $"rank".cast("long").as("exact_rank")),
         Similarity.ivfpqServedTrainRanks(s, d, 10),
         embWithNorms(s, d))
-      SessionScope.defer(s, cleanup)
-      out
     },
 
     // PII detection + redaction census — the scrubbing pass every

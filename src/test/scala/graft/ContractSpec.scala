@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
   *  - `entry` returns rows at sf0.001 (t1 smoke);
   *  - every `oracleSql` key has a matching query;
   *  - every registered query executes and returns rows at sf0.001;
-  *  - per-session state lives only in `graft.core.SessionScope`.
+  *  - per-session state lives only in `graft.core.SessionScope`, and
+  *    per-call persists go through its `cache` (no cleanup handles).
   */
 class ContractSpec extends SparkSuite {
 
@@ -93,20 +94,33 @@ class ContractSpec extends SparkSuite {
     assert(empty.isEmpty, s"queries with zero rows at sf0.001: $empty")
   }
 
+  /** Every main source file as (path, text), for the one-owner guards. */
+  private lazy val mainSources: List[(String, String)] = scala.util.Using.resource(
+      java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))) {
+    _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+  }.map(f => f.toString -> new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
+
   test("session state has one owner: only SessionScope keys maps by session or hooks context end") {
     // a second session-keyed map means a second lifecycle to evict and a
     // second listener pinning sessions until the context stops
     val owner = "graft/core/SessionScope.scala"
     val sessionKeyed = "Map\\[\\s*\\(?\\s*SparkSession\\b".r
-    val offenders = scala.util.Using.resource(
-        java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))) {
-      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-    }.filterNot(_.toString.endsWith(owner)).flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+    val offenders = mainSources.filterNot(_._1.endsWith(owner)).flatMap { case (f, src) =>
       (if (sessionKeyed.findFirstIn(src).isDefined) Seq(s"$f: map keyed by SparkSession") else Nil) ++
         (if (src.contains("onApplicationEnd")) Seq(s"$f: onApplicationEnd listener") else Nil)
     }
     assert(offenders.isEmpty,
       s"per-session state belongs in $owner: ${offenders.mkString("; ")}")
+  }
+
+  test("per-call persists have one owner: no main source returns a (DataFrame, () => Unit) cleanup handle") {
+    // a frame persisted per call is SessionScope.cache'd and released by
+    // the runner's drain; a returned handle is a second way to release it
+    val handle = "\\(\\s*DataFrame\\s*,\\s*\\(\\)\\s*=>\\s*Unit\\s*\\)".r
+    val offenders = mainSources.collect {
+      case (f, src) if handle.findFirstIn(src).isDefined => f
+    }
+    assert(offenders.isEmpty,
+      s"cache per-call persists with SessionScope.cache instead: ${offenders.mkString("; ")}")
   }
 }

@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicIntegerA
 
 import org.apache.spark.ListenerCensus
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.storage.StorageLevel
 
 import graft.SparkSuite
 
@@ -21,7 +22,9 @@ import graft.SparkSuite
   *      nothing of another's; eviction releases the root, the memos, the
   *      table handles and the pending handles, but leaves the old
   *      directory on disk (frames may still read it lazily);
-  *   4. one context-end listener per SparkContext, however many sessions.
+  *   4. one context-end listener per SparkContext, however many sessions;
+  *   5. a cached frame stays persisted until its own session's drain,
+  *      which counts and releases it.
   */
 class SessionScopeSpec extends SparkSuite {
 
@@ -94,6 +97,33 @@ class SessionScopeSpec extends SparkSuite {
     val wrong = (0 until ran.length()).count(ran.get(_) != 1)
     assert(wrong == 0, s"$wrong handles did not run exactly once")
     SessionScope.evict(s)
+  }
+
+  test("cache persists a frame until its session's drain, which counts and releases it") {
+    // id-set difference, as the serving-twin censuses: immune to the
+    // async ContextCleaner dropping unrelated ids concurrently
+    def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val other = spark.newSession()
+    val before = persisted
+    val mine = SessionScope.cache(spark.range(0, 1000).selectExpr("id * 3 AS y"))
+    assert(mine.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    assert(mine.count() == 1000)
+    val myIds = persisted -- before
+    assert(myIds.nonEmpty, "a materialized cached frame must register an RDD")
+    val theirs = SessionScope.cache(other.range(0, 1000).selectExpr("id * 7 AS z"))
+    assert(theirs.count() == 1000)
+    val theirIds = persisted -- before -- myIds
+    assert(theirIds.nonEmpty)
+
+    assert(SessionScope.drain(spark) == 1, "the drain counts the cached frame")
+    assert((persisted & myIds).isEmpty,
+      s"drain left the cached frame persisted: ${persisted & myIds}")
+    assert(theirIds.subsetOf(persisted),
+      "draining spark must not release the sibling session's cache")
+    assert(SessionScope.drain(other) == 1)
+    assert((persisted & theirIds).isEmpty,
+      s"drain(other) left its frame persisted: ${persisted & theirIds}")
+    SessionScope.evict(other)
   }
 
   test("path is stable within a session and keyed by family + dataset") {

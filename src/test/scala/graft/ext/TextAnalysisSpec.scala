@@ -1,8 +1,10 @@
 package graft.ext
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
+import graft.core.SessionScope
 
 /** Cross-query invariants of the text-analysis family that the per-row
   * oracle hash cannot express (consistency between independent censuses
@@ -10,6 +12,36 @@ import graft.SparkSuite
 class TextAnalysisSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.01"
+
+  /** The exact lexical and brute-force rank arms of `probes`, each cached
+    * until the next drain — the per-call inputs the served-fusion census
+    * and metrics grade against when the probes are not the session's.
+    * Cached because the fusion's TopK sampling replays its input (t16's
+    * lesson) and the brute arm is the expensive one. */
+  private def exactArms(probes: DataFrame, post: DataFrame,
+                        emb: DataFrame): (DataFrame, DataFrame) =
+    (SessionScope.cache(TextAnalysis.probeLexArm(post, probes)),
+      SessionScope.cache(TextAnalysis.rrfVecArmBrute(probes, emb)))
+
+  /** t30's census of `served` against the exact arms of `probes`. */
+  private def recallCensus(probes: DataFrame, post: DataFrame, emb: DataFrame,
+                           served: DataFrame): DataFrame = {
+    val (lex, vecExact) = exactArms(probes, post, emb)
+    TextAnalysis.servedFusionRecall(lex,
+      TextAnalysis.rrfFuseRanks(lex, vecExact).select("eval_id", "train_id"),
+      vecExact, served, emb)
+  }
+
+  /** t31's metrics of `served` against the graded exact slate of
+    * `probes`, cached: it feeds both the IDCG aggregate and the join. */
+  private def rankingMetrics(probes: DataFrame, post: DataFrame,
+                             emb: DataFrame, served: DataFrame): DataFrame = {
+    val (lex, vecExact) = exactArms(probes, post, emb)
+    TextAnalysis.servedRankingMetrics(lex,
+      SessionScope.cache(TextAnalysis.rrfFuseRanks(lex, vecExact).select(
+        col("eval_id"), col("train_id"), col("rank").cast("long").as("exact_rank"))),
+      served, emb)
+  }
 
   test("t10: lexical census reconciles with t07's token totals and itself") {
     val t10 = TextAnalysis.queries("t10_lexical_census")(spark, sf).collect()
@@ -607,12 +639,12 @@ class TextAnalysisSpec extends SparkSuite {
     val post = TextAnalysis.bm25ImpactsIdf(spark, docs, TextAnalysis.sqrtIdf)
     val served = Seq((0L, 13L, 1L), (0L, 11L, 2L), (0L, 12L, 3L))
       .toDF("eval_id", "train_id", "vec_rank")
-    val (census, cleanup) = TextAnalysis.servedFusionRecallManaged(
+    val census = recallCensus(
       docs.filter($"doc_id" % 100 === 0), post, emb, served)
     val rows = census.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getLong(4), r.getDouble(5))).toList
-    cleanup()
+    SessionScope.drain(spark)
     assert(rows == List(
       (0L, 5L, 4L, 0.8, 3L, 0.3),
       (100L, 1L, 1L, 0.2, 0L, 0.0),
@@ -653,12 +685,12 @@ class TextAnalysisSpec extends SparkSuite {
     val post = TextAnalysis.bm25ImpactsIdf(spark, docs, TextAnalysis.sqrtIdf)
     val served = Seq((0L, 13L, 1L), (0L, 11L, 2L), (0L, 12L, 3L))
       .toDF("eval_id", "train_id", "vec_rank")
-    val (metrics, cleanup) = TextAnalysis.servedRankingMetricsManaged(
+    val metrics = rankingMetrics(
       docs.filter($"doc_id" % 100 === 0), post, emb, served)
     val rows = metrics.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getLong(5), r.getDouble(6))).toList
-    cleanup()
+    SessionScope.drain(spark)
     assert(rows == List(
       (0L, 5L, 7908766L, 10271927L, 0.76994, 1L, 1.0),
       (100L, 5L, 5000000L, 10271927L, 0.486764, 1L, 1.0),
@@ -670,11 +702,11 @@ class TextAnalysisSpec extends SparkSuite {
     val perfect = Seq((400L, 13L, 1L), (400L, 12L, 2L), (400L, 11L, 3L),
       (400L, 2L, 4L), (400L, 1L, 5L), (400L, 3L, 6L))
       .toDF("eval_id", "train_id", "vec_rank")
-    val (m2, c2) = TextAnalysis.servedRankingMetricsManaged(
+    val m2 = rankingMetrics(
       docs.filter($"doc_id" % 100 === 0), post, emb, perfect)
     val r400 = m2.collect().map(r => (r.getLong(0), r.getDouble(4),
       r.getDouble(6))).find(_._1 == 400L)
-    c2()
+    SessionScope.drain(spark)
     assert(r400.contains((400L, 1.0, 1.0)),
       s"identical slate must grade ndcg = mrr = 1.0: $r400")
   }
@@ -686,9 +718,9 @@ class TextAnalysisSpec extends SparkSuite {
     // ivfpqSaveTrainIndexAt, the way a nightly job writes dated
     // artifacts (the session memo is for consumers of the CURRENT
     // index) — and re-grades the served fusion's recall after each
-    // rebuild, invoking the cleanup handle once the census
-    // materializes. Deterministic build ⇒ every round's census is
-    // identical; the persistent-RDD census must be FLAT after round 1
+    // rebuild, draining the session once the census materializes.
+    // Deterministic build ⇒ every round's census is identical; the
+    // persistent-RDD census must be FLAT after round 1
     // (id-set diff vs the post-round-1 baseline — immune to the async
     // ContextCleaner and to alien suite frames), which is exactly the
     // accumulation a dropped handle would break.
@@ -696,10 +728,7 @@ class TextAnalysisSpec extends SparkSuite {
     val docs = graft.core.Tables.documents(spark, sf)
     val post = TextAnalysis.bm25ImpactsIdf(spark, docs, TextAnalysis.sqrtIdf)
       .persist(MEMORY_AND_DISK)
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.dot(col("v"), col("v")))
-      .persist(MEMORY_AND_DISK)
+    val emb = TextAnalysis.embWithNorms(spark, sf).persist(MEMORY_AND_DISK)
     val probes = docs.filter(col("doc_id") % 100 === 0)
     val root = java.nio.file.Files.createTempDirectory("graft-t30-loop").toString
     def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -713,15 +742,13 @@ class TextAnalysisSpec extends SparkSuite {
         .select(col("vec_id").as("query_id"), col("v"))
       val servedArm =
         Similarity.ivfpqServedRanksFor(cbR, encR, probesVec, 10)
-      val (census, cleanup) = TextAnalysis.servedFusionRecallManaged(
-        probes, post, emb, servedArm)
+      val census = recallCensus(probes, post, emb, servedArm)
       // the full ablation a real swap ships: recall AND rank-aware
-      // metrics, re-graded per rebuild through their managed handles
-      val (metrics, mCleanup) = TextAnalysis.servedRankingMetricsManaged(
-        probes, post, emb, servedArm)
+      // metrics, re-graded per rebuild, drained once both materialize
+      val metrics = rankingMetrics(probes, post, emb, servedArm)
       val rows = census.collect().map(_.toSeq).toList ++
         metrics.collect().map(_.toSeq).toList
-      cleanup(); mCleanup()
+      SessionScope.drain(spark)
       assert(rows.nonEmpty, s"round $i graded no probes")
       if (i == 1) { firstRows = rows; baseline = persisted }
       else {
@@ -737,6 +764,32 @@ class TextAnalysisSpec extends SparkSuite {
       }
     }
     post.unpersist(); emb.unpersist()
+  }
+
+  test("t26–t31 catalog lambdas run twice as a runner runs them: round 2 leaves no persistent RDD beyond round 1") {
+    // a runner invokes the lambda, materializes, then drains; every
+    // per-call persist of the family is SessionScope.cache'd, so round 2
+    // may only reuse the session's memos, never add to them. Same
+    // id-set-difference discipline as the serving twins' censuses
+    // (immune to the async ContextCleaner shrinking the set).
+    val names = Seq("t26_hybrid_rerank", "t27_rerank_recall", "t28_rrf_fusion",
+      "t29_rrf_served", "t30_served_fusion_recall", "t31_ranking_metrics")
+    def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def round(): Map[String, Int] = names.map { n =>
+      TextAnalysis.queries(n)(spark, sf).count()
+      n -> SessionScope.drain(spark)
+    }.toMap
+    val drained = round()
+    val afterFirst = persisted
+    assert(round() == drained, "round 2 cached different frames than round 1")
+    val extra = persisted -- afterFirst
+    assert(extra.isEmpty,
+      s"round 2 left NEW persistent RDDs $extra beyond the post-round-1 " +
+        "census — a per-call persist escaped the runner's drain")
+    // teeth: the queries that cache per call must report it to the drain
+    // (t28 fuses two checkpointed memos and caches nothing)
+    assert(names.filterNot(_ == "t28_rrf_fusion").forall(drained(_) > 0),
+      s"drain counts per query: $drained")
   }
 
   test("t23 chunker: window/stride boundaries, tail semantics, position-weighted checksum") {

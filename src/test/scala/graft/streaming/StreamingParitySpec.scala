@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.SparkSuite
 import graft.SparkEntry
-import graft.core.Tables
+import graft.core.{SessionScope, Tables}
 
 /** Streaming↔batch parity over the REAL harness events data: the same
   * aggregation expressed as a streaming query over a file source must
@@ -930,21 +930,19 @@ class StreamingParitySpec extends SparkSuite {
     // t26's serving form: the sqrt-idf impacts index and the embedding
     // table are FROZEN (built in batch, as in production retrieval);
     // probe DOCUMENTS arrive live and each micro-batch runs the
-    // identical hybridRerankManaged definition. Every per-probe quantity
+    // identical hybridRerank definition. Every per-probe quantity
     // (slate, min-max normalizer, blend) derives only from the probe's
     // own rows, so the union over any batching equals the one-shot run.
-    import graft.ext.{Similarity, TextAnalysis}
+    import graft.ext.TextAnalysis
     val docs = Tables.documents(spark, sf)
     val post = TextAnalysis.bm25ImpactsIdf(spark, docs, TextAnalysis.sqrtIdf)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.dot(col("v"), col("v")))
+    val emb = TextAnalysis.embWithNorms(spark, sf)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val batch = {
-      val (df, cleanup) = TextAnalysis.hybridRerankManaged(
-        TextAnalysis.bm25ProbeTerms(docs), post, emb)
-      try df.collect().map(_.toSeq).toSet finally cleanup()
+      val df = TextAnalysis.hybridRerank(
+        TextAnalysis.probeScored(post, TextAnalysis.bm25ProbeTerms(docs)), emb)
+      try df.collect().map(_.toSeq).toSet finally SessionScope.drain(spark)
     }
     assert(batch.nonEmpty, "batch reranked no probes at sf0.001")
     val root = Files.createTempDirectory("graft-t26-stream").toString
@@ -975,13 +973,13 @@ class StreamingParitySpec extends SparkSuite {
       .foreachBatch { (b: DataFrame, _: Long) =>
         if (!b.isEmpty) {
           batches += 1
-          // managed form: a long-running serving loop must unpersist the
-          // per-call intermediate frames once the batch is materialized,
-          // or they accumulate across micro-batches (r16 ADVICE)
-          val (df, cleanup) = TextAnalysis.hybridRerankManaged(
-            TextAnalysis.bm25ProbeTerms(b), post, emb)
+          // a long-running serving loop must drain the per-call cached
+          // frames once the batch is materialized, or they accumulate
+          // across micro-batches (r16 ADVICE)
+          val df = TextAnalysis.hybridRerank(
+            TextAnalysis.probeScored(post, TextAnalysis.bm25ProbeTerms(b)), emb)
           val out = df.collect()
-          cleanup()
+          SessionScope.drain(spark)
           served.synchronized { served ++= out.map(_.toSeq) }
           censusPerBatch.synchronized { censusPerBatch += persisted }
         }
@@ -1017,15 +1015,12 @@ class StreamingParitySpec extends SparkSuite {
     val docs = Tables.documents(spark, sf)
     val post = TextAnalysis.bm25ImpactsIdf(spark, docs, TextAnalysis.sqrtIdf)
       .persist(MEMORY_AND_DISK)
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.dot(col("v"), col("v")))
-      .persist(MEMORY_AND_DISK)
+    val emb = TextAnalysis.embWithNorms(spark, sf).persist(MEMORY_AND_DISK)
     val probes = docs.filter(col("doc_id") % 100 === 0)
     def rerank(p: DataFrame): Set[Seq[Any]] = {
-      val (df, cleanup) = TextAnalysis.hybridRerankManaged(
-        TextAnalysis.bm25ProbeTerms(p), post, emb)
-      try df.collect().map(_.toSeq).toSet finally cleanup()
+      val df = TextAnalysis.hybridRerank(
+        TextAnalysis.probeScored(post, TextAnalysis.bm25ProbeTerms(p)), emb)
+      try df.collect().map(_.toSeq).toSet finally SessionScope.drain(spark)
     }
     val oneShot = rerank(probes)
     assert(oneShot.nonEmpty)
@@ -1096,7 +1091,7 @@ class StreamingParitySpec extends SparkSuite {
   test("RRF fusion serves arriving probe docs per micro-batch against the frozen index + embeddings (t28)") {
     // t28's serving form, same frame as the t26 twin: the sqrt-idf
     // impacts index and embedding table are FROZEN; probe documents
-    // arrive live and each micro-batch runs the identical rrfFusionManaged
+    // arrive live and each micro-batch runs the identical rrfFuseRanks
     // definition. Both rank arms partition by eval_id — rank-space
     // fusion carries no cross-probe state at all (not even a
     // normalizer), so the union over any batching equals the one-shot
@@ -1106,18 +1101,16 @@ class StreamingParitySpec extends SparkSuite {
     val docs = Tables.documents(spark, sf)
     val post = TextAnalysis.bm25ImpactsIdf(spark, docs, TextAnalysis.sqrtIdf)
       .persist(MEMORY_AND_DISK)
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.dot(col("v"), col("v")))
-      .persist(MEMORY_AND_DISK)
+    val emb = TextAnalysis.embWithNorms(spark, sf).persist(MEMORY_AND_DISK)
+    def fusion(p: DataFrame): DataFrame = TextAnalysis.rrfFuseRanks(
+      TextAnalysis.probeLexArm(post, p), TextAnalysis.rrfVecArmBrute(p, emb))
     def fuse(p: DataFrame): Set[Seq[Any]] = {
-      // managed form everywhere a caller materializes-then-moves-on: the
+      // drain everywhere a caller materializes-then-moves-on: the
       // serving loop below runs one fusion per micro-batch and MUST
-      // reclaim the per-call persisted frame (the r17 verdict's hygiene
+      // reclaim the per-call cached frame (the r17 verdict's hygiene
       // defect — the fusion used to persist with no handle)
-      val (df, cleanup) = TextAnalysis.rrfFusionManaged(p, post, emb)
-      val out = df.collect().map(_.toSeq).toSet
-      cleanup()
+      val out = fusion(p).collect().map(_.toSeq).toSet
+      SessionScope.drain(spark)
       out
     }
     // census by RDD-ID SET, not size: earlier suites leave abandoned
@@ -1133,14 +1126,13 @@ class StreamingParitySpec extends SparkSuite {
     // teeth for the no-growth census below: a materialized fusion MUST
     // visibly occupy the census until its cleanup runs — otherwise
     // "census never grew" would be vacuously true
-    val (teethDf, teethCleanup) = TextAnalysis.rrfFusionManaged(
-      docs.filter(col("doc_id") % 100 === 0), post, emb)
-    val oneShot = teethDf.collect().map(_.toSeq).toSet
+    val oneShot = fusion(docs.filter(col("doc_id") % 100 === 0))
+      .collect().map(_.toSeq).toSet
     val teethNew = persisted -- baseIds
     assert(teethNew.nonEmpty,
       "materialized fusion did not register a persistent RDD — the " +
         "no-growth census below has no teeth")
-    teethCleanup()
+    SessionScope.drain(spark)
     assert((persisted & teethNew).isEmpty,
       s"cleanup handle left fusion RDDs persisted: ${persisted & teethNew}")
     assert(oneShot.nonEmpty, "one-shot fusion produced no rows")
@@ -1250,7 +1242,7 @@ class StreamingParitySpec extends SparkSuite {
     // impacts index, the embedding table, and the saved IVF-PQ index
     // FILES are all static (built once, as a nightly job would); probe
     // documents arrive live and each micro-batch runs the identical
-    // rrfFusedWithArmManaged definition with the vector arm SERVED from
+    // rrfFuseRanks definition with the vector arm SERVED from
     // the files for exactly that batch's probes. Both arms rank per
     // probe and the serve is pure per-probe work against static files,
     // so the union over any probe batching equals the one-shot run —
@@ -1280,10 +1272,10 @@ class StreamingParitySpec extends SparkSuite {
       val probesVec = emb.join(broadcast(p.select(col("doc_id"))),
           col("vec_id") === col("doc_id"))
         .select(col("vec_id").as("query_id"), col("v"))
-      val (df, cleanup) = TextAnalysis.rrfFusedWithArmManaged(
-        p, post, Similarity.ivfpqServedRanksFor(cbR, encR, probesVec, 10))
+      val df = TextAnalysis.rrfFuseRanks(TextAnalysis.probeLexArm(post, p),
+        Similarity.ivfpqServedRanksFor(cbR, encR, probesVec, 10))
       val out = df.collect().map(_.toSeq).toSet
-      cleanup()
+      SessionScope.drain(spark)
       out
     }
     val probes = docs.filter(col("doc_id") % 100 === 0)
@@ -1346,23 +1338,20 @@ class StreamingParitySpec extends SparkSuite {
     // ledger equal to the once-applied one-shot batch slate — the
     // consume-transform-produce contract (reference
     // src/interfaces/index.ts:65) effectively-once end to end.
-    import graft.ext.{Similarity, TextAnalysis}
+    import graft.ext.TextAnalysis
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val docs = Tables.documents(spark, sf)
     val post = TextAnalysis.bm25ImpactsIdf(spark, docs, TextAnalysis.sqrtIdf)
       .persist(MEMORY_AND_DISK)
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.dot(col("v"), col("v")))
-      .persist(MEMORY_AND_DISK)
+    val emb = TextAnalysis.embWithNorms(spark, sf).persist(MEMORY_AND_DISK)
     def norm(df: DataFrame): Set[Seq[Any]] = df
       .select(col("eval_id").cast("long"), col("rank"), col("train_id"),
         col("bm25"), col("cos_sim"), col("blend"))
       .collect().map(_.toSeq).toSet
     val oneShot = {
-      val (df, cleanup) = TextAnalysis.hybridRerankManaged(
-        TextAnalysis.bm25ProbeTerms(docs), post, emb)
-      try norm(df) finally cleanup()
+      val df = TextAnalysis.hybridRerank(
+        TextAnalysis.probeScored(post, TextAnalysis.bm25ProbeTerms(docs)), emb)
+      try norm(df) finally SessionScope.drain(spark)
     }
     assert(oneShot.nonEmpty, "one-shot rerank produced no slate rows")
     // a probe's slate is immutable once served: the remerge just
@@ -1383,15 +1372,16 @@ class StreamingParitySpec extends SparkSuite {
         .foreachBatch { (b: DataFrame, id: Long) =>
           if (!b.isEmpty) {
             ExactlyOnceSink.pruneStages(root, id, b)
-            val (slate, cleanup) = TextAnalysis.hybridRerankManaged(
-              TextAnalysis.bm25ProbeTerms(b), post, emb)
+            val slate = TextAnalysis.hybridRerank(
+              TextAnalysis.probeScored(post, TextAnalysis.bm25ProbeTerms(b)),
+              emb)
             // capture batch 0's slate so the counterfactual below can
             // re-derive the naive replay without touching WAL internals
             if (id == 0 && armed)
               slate.write.mode("overwrite").parquet(root + "/b0_capture")
             val out = ExactlyOnceSink.applyBatch(
               root, id, slate, remerge, "eval_id")
-            cleanup()
+            SessionScope.drain(spark)
             outcomes.synchronized { outcomes += ((id, out.toString)) }
             if (id == 0 && armed)
               throw new RuntimeException(
@@ -1457,23 +1447,20 @@ class StreamingParitySpec extends SparkSuite {
     // once-applied one-shot fusion. Rank-fusion slates are immutable per
     // probe (no cross-probe state at all), so the same remerge-dedup
     // applies. Both hybrid combiners are now effectively-once end to end.
-    import graft.ext.{Similarity, TextAnalysis}
+    import graft.ext.TextAnalysis
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val docs = Tables.documents(spark, sf)
     val post = TextAnalysis.bm25ImpactsIdf(spark, docs, TextAnalysis.sqrtIdf)
       .persist(MEMORY_AND_DISK)
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.dot(col("v"), col("v")))
-      .persist(MEMORY_AND_DISK)
+    val emb = TextAnalysis.embWithNorms(spark, sf).persist(MEMORY_AND_DISK)
     def norm(df: DataFrame): Set[Seq[Any]] = df
       .select(col("eval_id").cast("long"), col("rank"), col("train_id"),
         col("lex_rank"), col("vec_rank"), col("rrf_fx"))
       .collect().map(_.toSeq).toSet
-    val (osDf, osCleanup) = TextAnalysis.rrfFusionManaged(
-      docs.filter(col("doc_id") % 100 === 0), post, emb)
-    val oneShot = norm(osDf)
-    osCleanup()
+    def fusion(p: DataFrame): DataFrame = TextAnalysis.rrfFuseRanks(
+      TextAnalysis.probeLexArm(post, p), TextAnalysis.rrfVecArmBrute(p, emb))
+    val oneShot = norm(fusion(docs.filter(col("doc_id") % 100 === 0)))
+    SessionScope.drain(spark)
     assert(oneShot.nonEmpty, "one-shot fusion produced no slate rows")
     // a probe's fused slate is immutable once served: the remerge just
     // deduplicates identical rows a replay re-presents
@@ -1493,12 +1480,12 @@ class StreamingParitySpec extends SparkSuite {
         .foreachBatch { (b: DataFrame, id: Long) =>
           if (!b.isEmpty) {
             ExactlyOnceSink.pruneStages(root, id, b)
-            val (slate, cleanup) = TextAnalysis.rrfFusionManaged(b, post, emb)
+            val slate = fusion(b)
             if (id == 0 && armed)
               slate.write.mode("overwrite").parquet(root + "/b0_capture")
             val out = ExactlyOnceSink.applyBatch(
               root, id, slate, remerge, "eval_id")
-            cleanup()
+            SessionScope.drain(spark)
             outcomes.synchronized { outcomes += ((id, out.toString)) }
             if (id == 0 && armed)
               throw new RuntimeException(
@@ -1576,21 +1563,20 @@ class StreamingParitySpec extends SparkSuite {
     // nightly build, memoized per (session, dataset): the same frames/
     // files every other t29 consumer in this session serves from
     val (cbR, encR) = Similarity.ivfpqSaveTrainIndex(spark, sf)
-    def servedFusion(p: DataFrame): (DataFrame, () => Unit) = {
+    def servedFusion(p: DataFrame): DataFrame = {
       val probesVec = emb.join(broadcast(p.select(col("doc_id"))),
           col("vec_id") === col("doc_id"))
         .select(col("vec_id").as("query_id"), col("v"))
-      TextAnalysis.rrfFusedWithArmManaged(
-        p, post, Similarity.ivfpqServedRanksFor(cbR, encR, probesVec, 10))
+      TextAnalysis.rrfFuseRanks(TextAnalysis.probeLexArm(post, p),
+        Similarity.ivfpqServedRanksFor(cbR, encR, probesVec, 10))
     }
     def norm(df: DataFrame): Set[Seq[Any]] = df
       .select(col("eval_id").cast("long"), col("rank"), col("train_id"),
         col("lex_rank"), col("vec_rank"), col("rrf_fx"))
       .collect().map(_.toSeq).toSet
     val probes = docs.filter(col("doc_id") % 100 === 0)
-    val (osDf, osCleanup) = servedFusion(probes)
-    val oneShot = norm(osDf)
-    osCleanup()
+    val oneShot = norm(servedFusion(probes))
+    SessionScope.drain(spark)
     assert(oneShot.nonEmpty, "one-shot served fusion produced no slate rows")
     // a probe's served slate is immutable once fused: the remerge just
     // deduplicates identical rows a replay re-presents
@@ -1609,12 +1595,12 @@ class StreamingParitySpec extends SparkSuite {
         .foreachBatch { (b: DataFrame, id: Long) =>
           if (!b.isEmpty) {
             ExactlyOnceSink.pruneStages(root, id, b)
-            val (slate, cleanup) = servedFusion(b)
+            val slate = servedFusion(b)
             if (id == 0 && armed)
               slate.write.mode("overwrite").parquet(root + "/b0_capture")
             val out = ExactlyOnceSink.applyBatch(
               root, id, slate, remerge, "eval_id")
-            cleanup()
+            SessionScope.drain(spark)
             outcomes.synchronized { outcomes += ((id, out.toString)) }
             if (id == 0 && armed)
               throw new RuntimeException(

@@ -5,7 +5,10 @@
 #   2. sbt test                         (every spec, incl. the shuffle
 #                                        ceilings and plan guards)
 #   3. Verify @ sf0.01 + DuckDB oracle  (the correctness gate: every
-#                                        query hash-checked)
+#                                        query hash-checked) + the
+#                                        benchmark harness's smoke test
+#                                        (perfbench/scala builds and
+#                                        calls the library too)
 #   4. Bench @ sf0.1 + accept-gate      (DRY-RUN through
 #      accept_bench_record.py — reports ACCEPT/REJECT without copying;
 #      commit a record only via the tool itself, per CLAUDE.md)
@@ -37,11 +40,12 @@ sbt -batch compile || exit 1
 echo "=== gate 2/4: test suite ==="
 sbt -batch test || exit 2
 
-echo "=== gate 3/4: Verify @ sf0.01 + DuckDB oracle ==="
+echo "=== gate 3/4: Verify @ sf0.01 + DuckDB oracle + perfbench smoke ==="
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/round_check_verify" \
   || exit 3
 python3 tools/check_oracle.py /tmp/round_check_verify /root/testdata/sf0.01 \
   || exit 3
+python3 perfbench/test_smoke.py || exit 3
 
 if [ "${SKIP_BENCH:-0}" = "1" ]; then
   echo "=== gate 4/4: SKIPPED (SKIP_BENCH=1) ==="
