@@ -28,7 +28,7 @@ import org.apache.spark.storage.StorageLevel
   *    (t26–t31 and their serving twins). A catalog lambda returns only
   *    its DataFrame and the runner materializes it later, so `cache`
   *    persists the frame and holds its unpersist until every runner
-  *    (Verify, Bench, QueryTimer, CpuProbe, `SparkSuite.withFixture`, a
+  *    (Verify, Bench, QueryTimer, `SparkSuite.withFixture`, a
   *    serving loop after each batch) drains the session.
   *
   * Lifecycle: a session's state is dropped when its SparkContext ends

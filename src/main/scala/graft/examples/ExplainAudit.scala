@@ -1,8 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.Runner
 
 /** Plan audit: print the formatted physical plan of selected queries so the
   * scan pushdown (`PushedFilters`/`ReadSchema`), join strategies, and
@@ -10,18 +8,12 @@ import graft.SparkEntry
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-explain-audit")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val queries = Runner.resolveOrExit(args.toSeq)
+    val spark = Runner.session()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { n =>
+    queries.foreach { case (n, fn) =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      fn(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -1,53 +1,59 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.LongAdder
 
-/** Ad-hoc single-query timer: `runMain graft.examples.QueryTimer <name>
-  * [sfDir] [reps]` — times one SparkEntry query end-to-end (count action)
-  * after a warm-up rep, printing each rep. For hotspot work where the full
-  * Bench sweep is too coarse.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.GraftShims
+
+import graft.Runner
+
+/** Isolated per-query cost: `runMain graft.examples.QueryTimer
+  * <q1,q2,...> [sfDir] [reps]` times each named query (the runner core's
+  * measured action) once as a warm-up rep and then `reps` more times,
+  * printing each rep. For hotspot work where the full Bench sweep is too
+  * coarse.
+  *
+  * The cache is cleared after EVERY rep, so each rep pays the full,
+  * subsidy-free cost — except the memo frames, which are
+  * localCheckpoint'd and survive the clear by design: rep 0 of the first
+  * listed query that needs them carries the shared builds, later reps
+  * price the query's marginal cost on top of them.
+  * Each rep line also prints the rep's shuffle write and read MB, summed
+  * by one task-end listener that is drained after the rep, outside its
+  * timing. Shuffle WRITE counts each exchanged byte once at its producer,
+  * so it is the cleanest "how much data crossed the cluster" measure;
+  * read can exceed write when an exchange feeds several consumers
+  * (reuse) or retries.
   *
   * `SPARK_GRAFT_SINK=noop` materializes EVERY column through the noop
   * writer instead (mirrors Bench's knob). count() lets Catalyst prune
   * whatever the row count doesn't need — in particular a query whose
   * expensive arm feeds a row-preserving LEFT JOIN (d18: the entire span
   * pipeline) gets join-eliminated and the timing measures a husk. Use
-  * noop when auditing cost, count when comparing against Bench. */
+  * noop when auditing cost or shuffle bytes, count when comparing against
+  * Bench. */
 object QueryTimer {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val queries = Runner.resolveOrExit(args.take(1).toSeq)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val fn = graft.SparkEntry.queries(name)
-    // process CPU per rep alongside wall (Bench's osBean trick): isolated
-    // idle adjudications of a bench-record CPU drift need the subsidy-free
-    // cpu-seconds, not just wall — wall hides scheduling/JIT effects that
-    // only show up as burned CPU at equal wall
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    def cpuNanos(): Long = osBean match {
-      case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
-      case _ => -1L
-    }
-    (0 to reps).foreach { i =>
-      // fresh plan each rep; persisted intermediates are cleared so every
-      // rep pays the full cost
-      val c0 = cpuNanos()
-      val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      val n =
-        if (sys.env.get("SPARK_GRAFT_SINK").contains("noop")) {
-          df.write.format("noop").mode("overwrite").save(); -1L
-        } else df.count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      val dc = if (c0 < 0) -1.0 else (cpuNanos() - c0) / 1e9
-      println(f"rep=$i rows=$n time=$dt%.3f s cpu=$dc%.3f s" +
+    val spark = Runner.session()
+    val read = new LongAdder; val written = new LongAdder
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        val m = t.taskMetrics
+        if (m != null) {
+          read.add(m.shuffleReadMetrics.totalBytesRead)
+          written.add(m.shuffleWriteMetrics.bytesWritten)
+        }
+      }
+    })
+    for ((name, fn) <- queries; i <- 0 to reps) {
+      read.reset(); written.reset()
+      val (dt, dc) = Runner.measure(spark, sfDir, fn)
+      GraftShims.drainListeners(spark.sparkContext)
+      println(f"$name%-28s rep=$i time=$dt%.3f s cpu=$dc%.3f s " +
+        f"shuffle_w=${written.sum / 1e6}%.2f MB shuffle_r=${read.sum / 1e6}%.2f MB" +
         (if (i == 0) " (warmup)" else ""))
       // managed queries defer cleanup handles per invocation
       // (SessionScope): the drain unpersists this rep's frames and keeps

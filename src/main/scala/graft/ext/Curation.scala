@@ -845,7 +845,7 @@ object Curation {
     // SIDE EFFECT (deliberate, c13 prove-the-files precedent): the
     // layout write below runs EAGERLY at DataFrame-construction time —
     // the census must read the files actually on disk, so plan-only
-    // tooling (ExplainAudit / ShuffleAudit / PlanShapeSpec) pays one
+    // tooling (ExplainAudit / PlanShapeSpec) pays one
     // sf-sized parquet write to the session's artifact root
     // (c22_zorder_<sf> under the per-session tmpdir since r19). The
     // dir is overwrite-mode per (session, sf) — bounded: one copy per

@@ -7,7 +7,9 @@ import scala.jdk.CollectionConverters._
   *  - every `oracleSql` key has a matching query;
   *  - every registered query executes and returns rows at sf0.001;
   *  - per-session state lives only in `graft.core.SessionScope`, and
-  *    per-call persists go through its `cache` (no cleanup handles).
+  *    per-call persists go through its `cache` (no cleanup handles);
+  *  - the runner mains share one session builder and CPU clock
+  *    (`graft.Runner`).
   */
 class ContractSpec extends SparkSuite {
 
@@ -122,5 +124,22 @@ class ContractSpec extends SparkSuite {
     }
     assert(offenders.isEmpty,
       s"cache per-call persists with SessionScope.cache instead: ${offenders.mkString("; ")}")
+  }
+
+  test("runners share one core: only graft/Runner.scala builds a session or defines cpuNanos") {
+    // a main with its own session or CPU clock drifts from the records it
+    // replays (time zone, core count, warm-up); comment lines don't count
+    val owner = "graft/Runner.scala"
+    val code = mainSources.map { case (f, src) =>
+      f -> src.linesIterator.filterNot(l => Seq("//", "*", "/*").exists(l.trim.startsWith)).toList
+    }
+    def hits(token: String) =
+      code.flatMap { case (f, lines) => lines.filter(_.contains(token)).map(_ => f) }
+    val builders = hits("SparkSession.builder()")
+    val clocks = hits("def cpuNanos")
+    assert(builders.size == 1 && builders.forall(_.endsWith(owner)),
+      s"SparkSession.builder() belongs only in $owner: ${builders.mkString("; ")}")
+    assert(clocks.size == 1 && clocks.forall(_.endsWith(owner)),
+      s"one def cpuNanos, in $owner: ${clocks.mkString("; ")}")
   }
 }

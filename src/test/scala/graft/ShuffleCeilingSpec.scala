@@ -10,7 +10,7 @@ import org.apache.spark.sql.GraftShims
   * SCALE.md's measured shuffle table is what backs every "signatures move,
   * text never does" claim — but a plan regression (a lost `broadcast()`
   * hint, a join reorder that exchanges the corpus, a window that sorts the
-  * world) used to show up only if someone re-ran `ShuffleAudit` and
+  * world) used to show up only if someone re-ran the shuffle audit and
   * re-read the doc. This spec executes the scale-critical queries at
   * sf0.01 under the noop sink (the audit-honest action — `count()` lets
   * Catalyst prune whole arms, see CLAUDE.md) with a task-metrics listener,
@@ -37,8 +37,9 @@ import org.apache.spark.sql.GraftShims
   *
   * A legitimate change that moves a ceiling (new testdata scale, an
   * intentionally different plan) should re-run `graft.examples
-  * .ShuffleAudit` under `SPARK_GRAFT_SINK=noop` and update BOTH this table
-  * and SCALE.md — that pairing is the point.
+  * .QueryTimer` under `SPARK_GRAFT_SINK=noop` (its per-rep shuffle
+  * write MB) and update BOTH this table and SCALE.md — that pairing is
+  * the point.
   */
 class ShuffleCeilingSpec extends SparkSuite {
 
@@ -195,7 +196,7 @@ class ShuffleCeilingSpec extends SparkSuite {
     assert(got <= kb,
       f"$name shuffled $got%.1f KB (ceiling $kb KB) — a broadcast was " +
         "lost or a join/window started exchanging the corpus; run " +
-        "graft.examples.ShuffleAudit (SPARK_GRAFT_SINK=noop) to localize, " +
+        "graft.examples.QueryTimer (SPARK_GRAFT_SINK=noop) to localize, " +
         "and update SCALE.md + this table only for an INTENTIONAL plan " +
         "change. NOTE: ceilings are absolute bytes tied to this suite's " +
         "local[4]/4-shuffle-partition config and lz4 block compression — " +

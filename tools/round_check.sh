@@ -8,7 +8,8 @@
 #                                        query hash-checked) + the
 #                                        benchmark harness's smoke test
 #                                        (perfbench/scala builds and
-#                                        calls the library too)
+#                                        calls the library too) + a
+#                                        two-query Bench smoke run
 #   4. Bench @ sf0.1 + accept-gate      (DRY-RUN through
 #      accept_bench_record.py — reports ACCEPT/REJECT without copying;
 #      commit a record only via the tool itself, per CLAUDE.md)
@@ -40,12 +41,23 @@ sbt -batch compile || exit 1
 echo "=== gate 2/4: test suite ==="
 sbt -batch test || exit 2
 
-echo "=== gate 3/4: Verify @ sf0.01 + DuckDB oracle + perfbench smoke ==="
+echo "=== gate 3/4: Verify @ sf0.01 + DuckDB oracle + perfbench + Bench smoke ==="
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/round_check_verify" \
   || exit 3
 python3 tools/check_oracle.py /tmp/round_check_verify /root/testdata/sf0.01 \
   || exit 3
 python3 perfbench/test_smoke.py || exit 3
+# Bench's main runs end to end even under SKIP_BENCH: the last record
+# line a two-query replay at sf0.001 prints (the summary) must parse with
+# failed == 0. Its durable copy goes to its own file so a real
+# /tmp/bench.json capture survives.
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 \
+  SPARK_GRAFT_BENCH_OUT=/tmp/round_check_bench_smoke.json \
+  sbt -batch "runMain graft.Bench q16_route_count,t16_bm25_retrieval" \
+  2>&1 | grep '^{"metric"' | tail -n 1 | python3 -c '
+import json, sys
+rec = json.loads(sys.stdin.read())
+sys.exit(0 if rec["failed"] == 0 else 1)' || exit 3
 
 if [ "${SKIP_BENCH:-0}" = "1" ]; then
   echo "=== gate 4/4: SKIPPED (SKIP_BENCH=1) ==="
