@@ -60,25 +60,18 @@ object Bench {
       // stretches, our CPU doesn't), so a starved run still RANKS queries
       // usably — rounds 8–10 all ran under external load.
       val times = (1 to reps).map(_ => Runner.measure(spark, sfDir, fn))
-      // NO cache clearing between queries — measured decision (round 11):
-      // queries that persist a shared subplan (the MinHash signature
-      // index, k-means assignments, BPE merge tables) legitimately reuse
-      // a sibling's cached frame via CacheManager plan-matching, exactly
-      // as a production pipeline materializes a signature index once per
-      // session; clearing between queries re-derived those frames and
-      // moved the catalog total from ~74 s to 121 s while breaking
-      // comparability with every earlier round's record. Memory pressure
-      // is handled by Spark's LRU block eviction (MEMORY_AND_DISK spills,
-      // never OOMs). Verify DOES clear per query — correctness runs feed
-      // no timing, so hygiene there is free. For subsidy-free per-query
-      // cost, QueryTimer clears between reps.
-      // drain the managed cleanup handles the query's lambda deferred
-      // (SessionScope) AFTER its reps: within-query reps still reuse the
-      // cached frames (identical plans plan-match, preserving rep
-      // comparability with earlier records), but a managed query's
-      // per-call persists no longer outlive it into the rest of the
-      // sweep bounded only by LRU pressure (r18 ADVICE). Untimed: the
-      // unpersist is non-blocking bookkeeping, not query cost.
+      // No cache clearing between queries, and a drain after each query's
+      // reps. Cross-query reuse goes only through named memos
+      // (SessionScope.frame: the MinHash signatures, the k-means
+      // assignments, the graph edge frames), built once per session as a
+      // production pipeline materializes a signature index once; a
+      // query's per-call caches are released by the drain, so none
+      // outlives its query into the rest of the sweep. Within-
+      // query reps still reuse their cached frames (identical plans
+      // plan-match, preserving rep comparability with earlier records).
+      // Verify clears per query (correctness runs feed no timing); for
+      // subsidy-free per-query cost, QueryTimer clears between reps.
+      // Untimed: the unpersist is non-blocking bookkeeping.
       graft.core.SessionScope.drain(spark)
       // wall-min and cpu-min may come from different reps: each is the
       // least-polluted observation of its own metric (noise only adds)
@@ -104,23 +97,8 @@ object Bench {
     // reference lives in-repo (tools/bench_idle_ref.txt; SCALE.md records
     // its provenance — committed calibration 4.923 at load 0.34 on this
     // 32-cpu box at the driver's sf0.1/32-cpu/1-rep config); -1 when the
-    // file is absent or this run's bean failed.
-    // per-MODE refs: reps>1 re-reads cached inputs and (post r14's
-    // kNN-graph memoization) duplicates less parallel work, so its
-    // clean-run cpu_wall profile sits legitimately below reps=1's —
-    // one shared ref mis-flagged a clean reps3 run as starved (0.93).
-    // Calibration provenance lives in SCALE.md next to each number.
-    def readRef(path: String): Double =
-      try {
-        val src = scala.io.Source.fromFile(path)
-        try src.mkString.trim.toDouble finally src.close()
-      } catch { case _: Throwable => -1.0 }
-    val idleRef = sys.env.get("SPARK_GRAFT_IDLE_REF").map(readRef).getOrElse {
-      val modeRef =
-        if (reps > 1) readRef("/root/repo/tools/bench_idle_ref_reps3.txt")
-        else -1.0
-      if (modeRef > 0) modeRef else readRef("/root/repo/tools/bench_idle_ref.txt")
-    }
+    // file is absent or this run's bean failed. See idleRef.
+    val idleRef = Bench.idleRef(reps)
     val ratioVsIdle =
       if (idleRef > 0 && cpuWallRatio > 0) cpuWallRatio / idleRef else -1.0
     // per-query seconds rounded to 1 ms: full-precision doubles made the
@@ -157,6 +135,27 @@ object Bench {
     val tainted = loadAvg > 1.5
     val summary = s"""{"metric":"total","value":${r3(total)},"unit":"sec","failed":$failed,"load_avg":$loadAvg,"load_avg_15":$loadAvg15,"reps":$reps,"cpu_wall_ratio":${r3(cpuWallRatio)},"ratio_vs_idle":${r3(ratioVsIdle)},"tainted":$tainted,"sf":"$sfDir"}"""
     (json, summary)
+  }
+
+  /** The committed known-idle cpu/wall ratio for a run of `reps` reps:
+    * the file `SPARK_GRAFT_IDLE_REF` names, else `tools/bench_idle_ref_reps3.txt`
+    * (reps > 1) or `tools/bench_idle_ref.txt` under `root`, the working
+    * tree the run starts in; -1 when absent or unreadable. Per-MODE refs:
+    * reps>1 re-reads cached inputs and duplicates less parallel work, so
+    * its clean-run cpu_wall profile sits legitimately below reps=1's — one
+    * shared ref mis-flagged a clean reps3 run as starved (0.93).
+    * Calibration provenance lives in SCALE.md next to each number. */
+  private[graft] def idleRef(reps: Int, root: java.io.File = new java.io.File("."),
+      refFile: Option[String] = sys.env.get("SPARK_GRAFT_IDLE_REF")): Double = {
+    def readRef(f: java.io.File): Double =
+      try {
+        val src = scala.io.Source.fromFile(f)
+        try src.mkString.trim.toDouble finally src.close()
+      } catch { case _: Throwable => -1.0 }
+    refFile.map(p => readRef(new java.io.File(p))).getOrElse {
+      val modeRef = if (reps > 1) readRef(new java.io.File(root, "tools/bench_idle_ref_reps3.txt")) else -1.0
+      if (modeRef > 0) modeRef else readRef(new java.io.File(root, "tools/bench_idle_ref.txt"))
+    }
   }
 
   /** Host steal of all CPUs in seconds since boot: field 8 of /proc/stat's

@@ -10,8 +10,12 @@ object Runner {
   type Query = (SparkSession, String) => DataFrame
 
   /** `local[SPARK_GRAFT_CPUS]` (default 4), shuffle partitions = cpus,
-    * UTC, UI off, log level WARN. */
+    * UTC, UI off, log level WARN. The level is set before the builder
+    * runs, once Spark's default log profile (root INFO) is installed, so
+    * no INFO start-up line is printed. */
   def session(): SparkSession = {
+    new org.apache.spark.internal.Logging { initializeLogIfNecessary(false) }
+    org.apache.logging.log4j.core.config.Configurator.setRootLevel(org.apache.logging.log4j.Level.WARN)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -17,16 +17,11 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Per-query cache hygiene: several queries persist() intermediates
-      // (MinHash bands, tokenized corpora) that only their own action
-      // consumes; without an explicit drop those MEMORY_AND_DISK blocks
-      // accumulate across the 100+-query sweep and squeeze later queries'
-      // execution memory. Queries are independent, so clearing between
-      // them is safe and also prevents accidental cross-query cached-plan
-      // reuse from masking a query's real cost. The drain runs the
-      // managed cleanup handles the lambda deferred (SessionScope) —
-      // here mostly to keep the pending list itself from growing across the
-      // sweep; clearCache already reclaims the blocks.
+      // Per-query cache hygiene: the drain releases the frames the
+      // query cached per call (SessionScope.cache); the clear also drops
+      // the Persisted memo frames' entries, so each query's plan is
+      // priced and checked without another query's cached blocks
+      // (those memos register again on their next read).
       graft.core.SessionScope.drain(spark)
       spark.sharedState.cacheManager.clearCache()
     }

@@ -14,10 +14,10 @@ import graft.Runner
   * coarse.
   *
   * The cache is cleared after EVERY rep, so each rep pays the full,
-  * subsidy-free cost — except the memo frames, which are
-  * localCheckpoint'd and survive the clear by design: rep 0 of the first
-  * listed query that needs them carries the shared builds, later reps
-  * price the query's marginal cost on top of them.
+  * subsidy-free cost — except the Checkpointed memo frames
+  * (`SessionScope.frame`), which survive the clear by design: rep 0 of
+  * the first listed query that needs them carries the shared builds,
+  * later reps price the query's marginal cost on top of them.
   * Each rep line also prints the rep's shuffle write and read MB, summed
   * by one task-end listener that is drained after the rep, outside its
   * timing. Shuffle WRITE counts each exchanged byte once at its producer,

@@ -470,14 +470,13 @@ object Curation {
     "c15_dsir_selection" -> { (s, d) =>
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      // persisted: the two LM trainings (3 subqueries each) and the
+      // cached: the two LM trainings (3 subqueries each) and the
       // scoring pass would otherwise re-scan and re-tokenize the corpus
       // seven times; the cached frame is the tokenized corpus a
       // production pipeline stages once before any LM work
-      val docs = Tables.documents(s, d)
+      val docs = SessionScope.cache(Tables.documents(s, d)
         .select($"doc_id", $"source", $"lang", split(trim($"text"), Tok.Ws).as("w"))
-        .filter(size($"w") >= 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .filter(size($"w") >= 2))
       val (tbT, tcT, vvT) = TextAnalysis.lmTablesOf(docs.filter($"lang" === "en"))
       val pool = docs.filter($"lang" =!= "en")
       val (tbR, tcR, vvR) = TextAnalysis.lmTablesOf(pool)
@@ -968,8 +967,7 @@ object Curation {
       import s.implicits._
       val ev = tierEvents(s, d)
       val cutoff = lit("1999-01-01").cast("timestamp")
-      val base = scd2Build(ev.filter($"ts" < cutoff))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val base = SessionScope.cache(scd2Build(ev.filter($"ts" < cutoff)))
       scd2Merge(base, ev.filter($"ts" >= cutoff))
         .select($"ck".as("c_custkey"), $"version", $"valid_from",
           $"valid_to", $"tier", $"is_current")

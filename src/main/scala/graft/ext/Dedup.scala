@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{SessionScope, Tables, Tok}
+import graft.core.SessionScope.{Checkpointed, Persisted}
 
 /** Deduplication operators for a training-data pipeline, over `documents`
   * and `embeddings`: exact, n-gram Jaccard, MinHash+LSH, SimHash, and
@@ -94,12 +95,12 @@ object Dedup {
   /** MinHash signatures per doc: (doc_id, s0..s7) — computed by the
     * codegen'd [[graft.functions.MinHashSigs]] expression in ONE narrow
     * per-row pass (no shingle explode, no groupBy shuffle; value-identical
-    * to the relational form, see its Scaladoc). Persisted — every consumer
-    * joins it at least twice, and nothing upstream is cacheable since the
-    * whole computation fused into the scan. */
+    * to the relational form, see its Scaladoc). A Persisted memo — every
+    * consumer joins it at least twice, nothing upstream is cacheable since
+    * the whole computation fused into the scan, and d03/d07/d09/d14/d17/
+    * d25 (and c11 through d17) read this one session build. */
   private def minhashSigs(s: SparkSession, d: String): DataFrame =
-    sigsOf(Tables.documents(s, d))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    SessionScope.frame(s, d, "d_sigs", Persisted)(sigsOf(Tables.documents(s, d)))
 
   /** The signature derivation itself, on an arbitrary `documents`-shaped
     * DataFrame: (doc_id, s0..s7) via the codegen'd expression. All narrow
@@ -121,20 +122,18 @@ object Dedup {
     * (which only needs the pair set, so it must not pay a discarded
     * global sort). */
   private def verifiedPairs(s: SparkSession, d: String): DataFrame =
-    SessionScope.memo(s, d, "d_verified") {
+    SessionScope.frame(s, d, "d_verified", Checkpointed) {
       // r19: memoized localCheckpoint — d07 and d09 each rebuilt the
       // candidate generation + Jaccard verification per invocation (the
       // persisted sub-frames plan-matched, the join work did not); the
       // verified pair set for a fixed corpus is a constant a dedup
       // pipeline computes once and feeds to both reporting and
-      // clustering. The build-scoped shingle persist is released once
-      // the checkpoint materializes; minhashSigs stays persisted (it is
-      // shared with d03's LSH path).
+      // clustering. The build-scoped shingle cache is released once
+      // the checkpoint materializes.
       import s.implicits._
       val cand = lshCandidates(minhashSigs(s, d))
       // exact verification over candidates only
-      val shd = shingles(s, d).select($"doc_id", $"s")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val shd = SessionScope.cache(shingles(s, d).select($"doc_id", $"s"))
       // per-doc distinct-shingle count is the ARRAY size — a narrow map,
       // not a groupBy over the exploded rows
       val cnt = shingleArrays(s, d)
@@ -143,15 +142,12 @@ object Dedup {
         .join(shd.as("x"), $"doc_a" === col("x.doc_id"))
         .join(shd.as("y"), $"doc_b" === col("y.doc_id") && col("x.s") === col("y.s"))
         .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("c"))
-      val out = common
+      common
         .join(cnt.as("cx"), $"doc_a" === col("cx.doc_id"))
         .join(cnt.as("cy"), $"doc_b" === col("cy.doc_id"))
         .select($"doc_a", $"doc_b",
           ($"c".cast("double") / (col("cx.n") + col("cy.n") - $"c")).as("jaccard"))
         .filter($"jaccard" >= 0.2)
-        .localCheckpoint()
-      shd.unpersist(false)
-      out
     }
 
   /** md5 hashes of fixed 20-word chunks per doc: (doc_id, source, h).
@@ -322,11 +318,11 @@ object Dedup {
     val bands1 = sh.select(col("doc_id"), col("sh"), explode(array(bandCols: _*)).as("band"))
       .select(col("doc_id"), col("sh"), col("band.bi"), col("band.bv"))
     val bands = maxBlockMembers.fold(bands1) { cap =>
-      // persisted: the census, then BOTH sides of the pair self-join,
+      // cached: the census, then BOTH sides of the pair self-join,
       // would otherwise each re-scan the corpus and re-hash signatures
       // (4 scans for 1); the cached frame is 4 narrow rows/doc — the
       // materialized signature index a production pipeline stores anyway
-      val bands0 = bands1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val bands0 = SessionScope.cache(bands1)
       val cool = bands0.groupBy(col("bi"), col("bv")).agg(count(lit(1)).as("bn"))
         .filter(col("bn") <= cap).select(col("bi"), col("bv"))
       bands0.join(broadcast(cool), Seq("bi", "bv"))
@@ -741,19 +737,18 @@ object Dedup {
       val cents = e.filter($"vec_id" < 8)
         .select($"vec_id".as("cent_id"), $"v".as("cv"), $"nrm".as("cnrm"))
       // same map-side-combinable argmax assignment as s03 (see there)
-      // persisted: both sides of the pair self-join consume it, and the
+      // cached: both sides of the pair self-join consume it, and the
       // plan otherwise re-scores the full corpus twice (no ReusedExchange
       // across the differently-projected join sides) — the production
       // layout writes the cell assignment once, then pairs against it
-      val assigned = e.join(broadcast(cents))
+      val assigned = SessionScope.cache(e.join(broadcast(cents))
         .select($"vec_id", $"v", $"nrm", $"cent_id",
           Similarity.cosineWithNorms($"v", $"cv", $"nrm", $"cnrm").as("ccos"))
         .groupBy($"vec_id")
         .agg(max_by(struct($"v", $"nrm", $"cent_id"),
           struct($"ccos", (-$"cent_id").as("tb"))).as("b"))
         .select($"vec_id", $"b.v".as("v"), $"b.nrm".as("nrm"),
-          $"b.cent_id".as("cell"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          $"b.cent_id".as("cell")))
       val cos = Similarity.cosineWithNorms(
         col("a.v"), col("b.v"), col("a.nrm"), col("b.nrm"))
       assigned.as("a").join(assigned.as("b"),
@@ -1048,16 +1043,15 @@ object Dedup {
     // over all 128 perms (exact 1/128 multiples — bitwise in double).
     "d19_minhash_wide" -> { (s, d) =>
       import s.implicits._
-      // persisted: bands self-join + both est_sim sides = 4 consumers of
+      // cached: bands self-join + both est_sim sides = 4 consumers of
       // a frame whose whole computation fused into the scan (same trade
-      // as minhashSigs; Verify/Bench clear the cache between queries, so
-      // nothing accumulates across a sweep)
-      val sigs = Tables.documents(s, d)
+      // as minhashSigs; released at the drain, so nothing accumulates
+      // across a sweep)
+      val sigs = SessionScope.cache(Tables.documents(s, d)
         .select($"doc_id", split(trim($"text"), Tok.Ws).as("w"))
         .filter(size($"w") >= 3)
         .select($"doc_id",
-          graft.functions.MinHashSigs($"w", WideNumPerms).as("sig"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          graft.functions.MinHashSigs($"w", WideNumPerms).as("sig")))
       def bkey(b: Int): Column = conv(substring(md5(concat_ws(",",
         (0 until WideRowsPerBand).map(r =>
           element_at($"sig", b * WideRowsPerBand + r + 1).cast("string")): _*)
@@ -1182,9 +1176,8 @@ object Dedup {
     "d21_substring_removal" -> { (s, d) =>
       import s.implicits._
       val K = 20
-      val docs = Tables.spread(s, Tables.documents(s, d))
-        .select($"doc_id", $"source", split(trim($"text"), Tok.Ws).as("w"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val docs = SessionScope.cache(Tables.spread(s, Tables.documents(s, d))
+        .select($"doc_id", $"source", split(trim($"text"), Tok.Ws).as("w")))
       val pos = docs
         .select($"doc_id", graft.functions.ShingleHashes($"w", K).as("hs"))
         .select($"doc_id", posexplode($"hs").as(Seq("p0", "h")))
@@ -1268,8 +1261,7 @@ object Dedup {
     // fingerprint (boilerplate) gets the d11 hot-block cap at scale.
     "d24_winnow_fingerprint" -> { (s, d) =>
       import s.implicits._
-      val fps = winnowFingerprints(Tables.documents(s, d), k = 4, w = 8)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val fps = SessionScope.cache(winnowFingerprints(Tables.documents(s, d), k = 4, w = 8))
       val pairs = fps.select($"doc_id", explode($"fps").as("fp"))
       val partners = pairs.as("a").join(pairs.as("b"),
           col("a.fp") === col("b.fp") && col("a.doc_id") =!= col("b.doc_id"))

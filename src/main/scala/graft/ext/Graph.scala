@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{SessionScope, Tables}
+import graft.core.SessionScope.{Checkpointed, Persisted}
 
 /** Graph analytics over the relationship implicit in the fact tables: the
   * customer↔supplier bipartite graph (an edge where a customer's order
@@ -52,14 +53,13 @@ object Graph {
     * order-insensitive (aggregates, joins, ranked windows with total
     * tie-breaks), so results are unchanged. */
   private def custSupp(s: SparkSession, d: String): DataFrame =
-    SessionScope.memo(s, d, "g_cs") {
+    SessionScope.frame(s, d, "g_cs", Checkpointed) {
       import s.implicits._
       Tables.orders(s, d).select($"o_orderkey", $"o_custkey")
         .join(Tables.lineitem(s, d).select($"l_orderkey", $"l_suppkey"),
           $"o_orderkey" === $"l_orderkey")
         .select($"o_custkey".as("c"), $"l_suppkey".as("sp"))
         .distinct()
-        .localCheckpoint()
     }
 
   /** The supplier co-occurrence PAIR STRENGTHS (sa, sb, shared, ca, cb)
@@ -70,15 +70,14 @@ object Graph {
     * pair stage differed only in the ca/cb size columns — the two plans
     * could not CacheManager-match, so a Bench session paid the
     * quadratic twice. One localCheckpoint'd frame (≤ |suppliers|²/2
-    * rows of five longs) now feeds both; the build-side `sets` persist
+    * rows of five longs) now feeds both; the build-side `sets` cache
     * is released as soon as the checkpoint materializes. */
   private[ext] def coPairs(s: SparkSession, d: String): DataFrame =
-    SessionScope.memo(s, d, "g_pairs") {
+    SessionScope.frame(s, d, "g_pairs", Checkpointed) {
       import s.implicits._
-      val sets = custSupp(s, d).groupBy($"sp")
-        .agg(sort_array(collect_set($"c")).as("cs"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val out = sets.as("a").join(sets.as("b"), col("a.sp") < col("b.sp"))
+      val sets = SessionScope.cache(custSupp(s, d).groupBy($"sp")
+        .agg(sort_array(collect_set($"c")).as("cs")))
+      sets.as("a").join(sets.as("b"), col("a.sp") < col("b.sp"))
         .select(col("a.sp").as("sa"), col("b.sp").as("sb"),
           // codegen'd linear merge over the sorted sets —
           // size(array_intersect(...)) hash-builds per row and was
@@ -88,17 +87,14 @@ object Graph {
           size(col("a.cs")).cast("long").as("ca"),
           size(col("b.cs")).cast("long").as("cb"))
         .filter($"shared" > 0)
-        .localCheckpoint()
-      sets.unpersist(false)
-      out
     }
 
   /** The graph's 1-row distinct-customer census, shared by g03/g04's
     * lift denominators — memoized so neither pays a custSupp pass. */
   private[graft] def coNc(s: SparkSession, d: String): DataFrame =
-    SessionScope.memo(s, d, "g_nc") {
+    SessionScope.frame(s, d, "g_nc", Checkpointed) {
       import s.implicits._
-      custSupp(s, d).agg(countDistinct($"c").as("nc")).localCheckpoint()
+      custSupp(s, d).agg(countDistinct($"c").as("nc"))
     }
 
   /** Undirected bipartite edge list, both directions: node id = 2·custkey
@@ -115,14 +111,12 @@ object Graph {
     * projection sparsified to each node's MUTUAL top-6 partners —
     * bounded-degree (≤ 6) by construction, which is what makes the
     * wedge join skew-proof and the peel loop's per-round state
-    * node-sized. Every intermediate is persisted because multiple arms
-    * consume it (measured on g06: these caches are the difference
-    * between 8.9 and ~2 s steady at sf0.1 — dir's two union arms and
-    * the mutuality join's x/y arms would each recompute the 500k-pair
-    * intersection build). End-of-life: g04's documented policy
-    * (MEMORY_AND_DISK LRU + Verify's per-query clearCache). */
+    * node-sized. The ranked `top` frame is cached for the mutuality
+    * join's x/y arms (measured on g06: caching the intermediates is the
+    * difference between 8.9 and ~2 s steady at sf0.1) until the
+    * checkpoint materializes. */
   private def mutualTopEdges(s: SparkSession, d: String): DataFrame =
-    SessionScope.memo(s, d, "g_mutual") {
+    SessionScope.frame(s, d, "g_mutual", Checkpointed) {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       val pairs = coPairs(s, d)
@@ -133,11 +127,10 @@ object Graph {
       // shared is pair-symmetric so the x-side value is THE pair's value.
       // Callers that only need topology select (u, v) off the one shared
       // memoized frame — the extra long does not change the build.
-      val top = dir.withColumn("rk", row_number().over(
+      val top = SessionScope.cache(dir.withColumn("rk", row_number().over(
           Window.partitionBy($"n").orderBy($"shared".desc, $"p")))
         .filter($"rk" <= 6)
-        .select($"n", $"p", expr("1000000 DIV shared").as("w"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select($"n", $"p", expr("1000000 DIV shared").as("w")))
       // mutual sparsification: keep (u,v) iff u ranks v AND v ranks u.
       // localCheckpoint'd (r19, was a lazy persist shared only by
       // CacheManager plan-matching): the ≤6-degree edge frame is tiny,
@@ -145,13 +138,10 @@ object Graph {
       // and the checkpoint base collapsed g06's analyzed plan from
       // ~340 KB (five InMemoryRelation splices of the whole build tree,
       // re-walked by Catalyst per invocation) to round-local size.
-      val out = top.as("x").join(top.as("y"),
+      top.as("x").join(top.as("y"),
           col("x.n") === col("y.p") && col("x.p") === col("y.n") &&
             col("x.n") < col("x.p"))
         .select(col("x.n").as("u"), col("x.p").as("v"), col("x.w").as("w"))
-        .localCheckpoint()
-      top.unpersist(false)
-      out
     }
 
   /** g07's peel loop over any undirected `(u, v)` edge frame (u < v
@@ -213,19 +203,18 @@ object Graph {
     * now serves both loops; layout-free by construction (every consumer
     * join broadcasts the node-sized frontier/dist side), so the
     * ed2 checkpoint-loses-partitioning hazard does not apply. */
-  private def mutualAdj(s: SparkSession, d: String): DataFrame =
-    SessionScope.memo(s, d, "g_adj") {
+  private[graft] def mutualAdj(s: SparkSession, d: String): DataFrame =
+    SessionScope.frame(s, d, "g_adj", Checkpointed) {
       val ed = mutualTopEdges(s, d)
       ed.select(col("u").as("a"), col("v").as("b"), col("w"))
         .unionByName(ed.select(col("v").as("a"), col("u").as("b"), col("w")))
-        .localCheckpoint()
     }
 
   /** The mutual graph's node universe `(n)` — bfs seeds/strands and
     * sssp seeds both derive from it; memoized beside [[mutualAdj]]. */
-  private def mutualNodes(s: SparkSession, d: String): DataFrame =
-    SessionScope.memo(s, d, "g_adjn") {
-      mutualAdj(s, d).select(col("a").as("n")).distinct().localCheckpoint()
+  private[graft] def mutualNodes(s: SparkSession, d: String): DataFrame =
+    SessionScope.frame(s, d, "g_adjn", Checkpointed) {
+      mutualAdj(s, d).select(col("a").as("n")).distinct()
     }
 
   /** g08's multi-source BFS over any undirected `(u, v)` edge frame:
@@ -328,10 +317,9 @@ object Graph {
     // salt or cap before running g01 at scale.
     "g02_degree_census" -> { (s, d) =>
       import s.implicits._
-      // same persisted node-partitioned frame as g01, so a session
-      // running both queries distills and lays out the edge list ONCE
-      // (CacheManager plan-matching — the Bench session's shape)
-      ed2(s, d).groupBy($"u").agg(count(lit(1)).as("deg"))
+      // the same memoized degree frame as g01/g10, so a session running
+      // them distills, lays out and counts the edge list ONCE
+      nodeDeg(s, d)
         .select(when($"u" % 2 === 0, lit("customer")).otherwise(lit("supplier"))
           .as("kind"),
           (length(conv($"deg", 10, 2)) - 1).cast("int").as("bucket"),
@@ -420,7 +408,8 @@ object Graph {
       import org.apache.spark.sql.expressions.Window
       val words = 16
       val cs = custSupp(s, d)
-      val bm = cs
+      // cached for the self-join's two arms (rows are 16 longs — bounded)
+      val bm = SessionScope.cache(cs
         .select($"sp", expr("c DIV 1024").as("seg"),
           expr("CAST((c % 1024) DIV 64 AS INT)").as("sub"),
           expr("shiftleft(CAST(1 AS BIGINT), CAST(c % 64 AS INT))").as("m"))
@@ -429,11 +418,7 @@ object Graph {
           coalesce(expr("bit_or(CASE WHEN sub = 0 THEN m END)"), lit(0L)).as("w0"),
           (1 until words).map(k =>
             coalesce(expr(s"bit_or(CASE WHEN sub = $k THEN m END)"), lit(0L))
-              .as(s"w$k")): _*)
-        // persisted lazily for the self-join's two arms; like g01's round
-        // frames, end-of-life is MEMORY_AND_DISK LRU eviction (rows are 16
-        // longs — bounded) and Verify's per-query clearCache() in sweeps
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              .as(s"w$k")): _*))
       val cnt = cs.groupBy($"sp").agg(count(lit(1)).as("cnt"))
       val n = coNc(s, d)
       val sharedExpr = (0 until words).map(k =>
@@ -482,8 +467,7 @@ object Graph {
     "g05_labelprop_converged" -> { (s, d) =>
       import s.implicits._
       val ed = ed2(s, d)
-      var lbl = ed.select($"u").distinct().select($"u", $"u".as("lbl"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      var lbl = SessionScope.cache(ed.select($"u").distinct().select($"u", $"u".as("lbl")))
       val hist = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
       var round = 1
       var changed = -1L
@@ -681,28 +665,25 @@ object Graph {
     "g10_personalized_pagerank" -> { (s, d) =>
       import s.implicits._
       val ed = ed2(s, d)
-      val deg = ed.groupBy($"u").agg(count(lit(1)).as("deg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val deg = nodeDeg(s, d)
       val seedPred = "u % 2 = 1 AND (u - 1) DIV 2 % 7 = 3"
       val counts = deg.agg(count(lit(1)).as("nn"),
         count(when(expr(seedPred), 1)).as("ns"))
-      var sc = deg.crossJoin(broadcast(counts))
+      var sc = SessionScope.cache(deg.crossJoin(broadcast(counts))
         .select($"u",
           when(expr(seedPred), lit(1000000L)).otherwise(lit(0L)).as("sc"),
           $"deg",
           expr(s"CASE WHEN $seedPred THEN 150000 * nn DIV ns ELSE 0 END")
-            .as("rst"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // g01's lazy-persist loop policy verbatim (fixed horizon, tiny
-      // node-sized frames, MEMORY_AND_DISK + LRU end-of-life)
+            .as("rst")))
+      // g01's lazy-cache loop policy verbatim (fixed horizon, tiny
+      // node-sized frames, released at the drain)
       for (_ <- 1 to 3) {
         val contrib = ed.join(sc, "u")
           .groupBy($"v").agg(sum(expr("sc DIV deg")).as("m"))
-        sc = contrib.select($"v".as("u"), $"m")
+        sc = SessionScope.cache(contrib.select($"v".as("u"), $"m")
           .join(sc.select($"u", $"deg", $"rst"), "u")
           .select($"u", ($"rst" + expr("85 * m DIV 100")).as("sc"),
-            $"deg", $"rst")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            $"deg", $"rst"))
       }
       import org.apache.spark.sql.expressions.Window
       sc.filter($"u" % 2 === 1)
@@ -722,31 +703,28 @@ object Graph {
     "g01_pagerank" -> { (s, d) =>
       import s.implicits._
       val ed = ed2(s, d)
-      val deg = ed.groupBy($"u").agg(count(lit(1)).as("deg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val deg = nodeDeg(s, d)
       var sc = deg.select($"u", lit(Scale).as("sc"), $"deg")
-      // Iterative-loop cache policy, measured (rounds 11→13): persists are
+      // Iterative-loop cache policy, measured (rounds 11→13): caches are
       // LAZY and nothing is unpersisted inside the fixed-3-round loop. The
       // round-12 form forced an eager count() per round to release round
       // n−1 immediately; that traded a 6× steady-state regression (0.28 →
       // 1.72 s — each count() is an extra blocking job, and later reps
       // recompute rounds 1–2 because their frames are gone) for hygiene
-      // that MEMORY_AND_DISK + LRU block eviction already provides: the
-      // superseded frames are node-sized (three (long,long,long) rows per
-      // node), they spill rather than OOM, and Verify's per-query
-      // clearCache() drops them in correctness sweeps. An eager count IS
-      // correct in an iterate-to-convergence loop, where it doubles as the
-      // convergence check — this fixed-horizon query is not that loop.
-      // deg and ed stay persisted across rounds (real per-round reuse;
-      // ed's layout is shared with g02/g03 in a Bench session).
+      // that the runner's drain already provides: the superseded frames
+      // are node-sized (three (long,long,long) rows per node), they spill
+      // rather than OOM, and every round frame is released once the query
+      // has materialized. An eager count IS correct in an iterate-to-
+      // convergence loop, where it doubles as the convergence check — this
+      // fixed-horizon query is not that loop. deg and ed are the memoized
+      // frames g02/g05/g10 share (real per-round reuse).
       for (_ <- 1 to 3) {
         val contrib = ed.join(sc, "u")
           .groupBy($"v").agg(sum(expr("sc DIV deg")).as("m"))
-        sc = contrib
+        sc = SessionScope.cache(contrib
           .select($"v".as("u"), (lit(150000L) + expr("85 * m DIV 100")).as("sc"))
           .join(deg, "u")
-          .select($"u", $"sc", $"deg")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .select($"u", $"sc", $"deg"))
       }
       val suppliers = sc.filter($"u" % 2 === 1)
         .select(expr("(u - 1) DIV 2").as("s_suppkey"), $"deg".as("n_partners"),
@@ -791,27 +769,30 @@ object Graph {
   // layout exchange — plus the per-round contribution partials, which
   // ARE the Pregel cost). This is the local stand-in for bucketing both
   // tables on the node id at scale.
-  // NOT memoized, deliberately (r19, measured): a memoized variant was
-  // tried both ways and rejected — (a) memo + persist registers the
-  // cache entry exactly once, so the first sweep-side clearCache()
-  // (Verify per query, ShuffleCeilingSpec per test) strips it
-  // permanently and every later loop round re-runs the repartition
-  // exchange (g05's ceiling tripped 1.38 → 3.5 MB); (b) memo +
-  // localCheckpoint loses the advertised hashpartitioning(u) layout —
-  // this Spark build's LogicalRDD does not carry the checkpointed
-  // plan's output partitioning, so EVERY round's edges⋈scores join
-  // re-exchanged the full edge frame (g01's ceiling tripped 1.40 →
-  // 3.7 MB, plan showed `Exchange hashpartitioning(u)` over
-  // `Scan ExistingRDD` per round). The per-invocation persist below
-  // re-registers per call (clearCache-safe) and g01/g02/g05/g10 share
-  // it via CacheManager plan-matching — which stays sound here because
-  // all four build from the SAME memoized custSupp LogicalRDD, so their
-  // canonical plans are identical by construction.
-  private def ed2(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    edges(s, d).repartition($"u")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
+  // Memoized as a Persisted frame, not a Checkpointed one (r19,
+  // measured): a localCheckpoint loses the advertised hashpartitioning(u)
+  // layout — this Spark build's LogicalRDD does not carry the
+  // checkpointed plan's output partitioning, so EVERY round's
+  // edges⋈scores join re-exchanged the full edge frame (g01's ceiling
+  // tripped 1.40 → 3.7 MB, plan showed `Exchange hashpartitioning(u)`
+  // over `Scan ExistingRDD` per round). A Persisted memo keeps the layout
+  // and registers again after a sweep-side clearCache() (Verify per
+  // query, ShuffleCeilingSpec per test), so the loop rounds never re-run
+  // the repartition exchange (g05's ceiling once tripped 1.38 → 3.5 MB
+  // on a memo that did not).
+  private def ed2(s: SparkSession, d: String): DataFrame =
+    SessionScope.frame(s, d, "g_ed2", Persisted) {
+      import s.implicits._
+      edges(s, d).repartition($"u")
+    }
+
+  /** Each node's degree `(u, deg)` over [[ed2]] — g01's and g10's score
+    * denominator and g02's census input, one lazy build per session. */
+  private def nodeDeg(s: SparkSession, d: String): DataFrame =
+    SessionScope.frame(s, d, "g_deg", Persisted) {
+      import s.implicits._
+      ed2(s, d).groupBy($"u").agg(count(lit(1)).as("deg"))
+    }
 
   val oracle: Map[String, String] = {
     // MATERIALIZED: DuckDB inlines plain CTEs per reference — g05's

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{SessionScope, Tables, Tok}
+import graft.core.SessionScope.{Checkpointed, Persisted}
 
 /** Text-analysis operators for a large-scale training-data pipeline, over
   * the `documents` table: token counting, quality scoring, language ID,
@@ -201,21 +202,19 @@ object TextAnalysis {
 
   private[graft] def knTables(dv: DataFrame): KnTables = {
     val tr = dv.filter(col("split") === "train")
-    val t3 = triExplode(tr)
-      .groupBy(col("w1"), col("w2"), col("w3")).agg(count(lit(1)).as("c123"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val t3 = SessionScope.cache(triExplode(tr)
+      .groupBy(col("w1"), col("w2"), col("w3")).agg(count(lit(1)).as("c123")))
     val ctx = t3.groupBy(col("w1"), col("w2"))
       .agg(sum(col("c123")).as("ctx_tot"), count(lit(1)).as("ctx_types"))
-    val n23 = t3.groupBy(col("w2"), col("w3")).agg(count(lit(1)).as("n1p_23"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val n23 = SessionScope.cache(
+      t3.groupBy(col("w2"), col("w3")).agg(count(lit(1)).as("n1p_23")))
     val n2 = n23.groupBy(col("w2"))
       .agg(sum(col("n1p_23")).as("n2_tot"), count(lit(1)).as("n2_types"))
-    val bt = tr.select(explode(expr(
+    val bt = SessionScope.cache(tr.select(explode(expr(
         """transform(sequence(1, size(w) - 1),
           |  i -> named_struct('b1', element_at(w, i),
           |    'b2', element_at(w, i + 1)))""".stripMargin)).as("z"))
-      .select(col("z.b1").as("b1"), col("z.b2").as("b2")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("z.b1").as("b1"), col("z.b2").as("b2")).distinct())
     val n3 = bt.groupBy(col("b2")).agg(count(lit(1)).as("n1p_3"))
       .select(col("b2").as("w3"), col("n1p_3"))
     val nall = bt.agg(count(lit(1)).as("n1p_all")).withColumn("one", lit(1))
@@ -297,10 +296,9 @@ object TextAnalysis {
 
   /** The tokenized train-side term-frequency frame `(train_id, dl, t, tf)`
     * every BM25-shaped index derives from — the one WordCounts corpus
-    * scan, persisted because df/dl/stats all fold over it. */
+    * scan, cached because df/dl/stats all fold over it. */
   private[graft] def bm25Tf(s: SparkSession, docs: DataFrame): DataFrame =
-    bm25TfPlan(s, docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    SessionScope.cache(bm25TfPlan(s, docs))
 
   /** [[bm25Tf]]'s un-persisted plan. */
   private def bm25TfPlan(s: SparkSession, docs: DataFrame): DataFrame = {
@@ -316,7 +314,7 @@ object TextAnalysis {
     * their postings indexes (same tf/df/stats build, different idf) from
     * the identical corpus scan, so a session running both (a bench sweep,
     * a serving process hosting both retrievers) should tokenize the
-    * train corpus ONCE. Rides [[SessionScope.memo]] — the generic
+    * train corpus ONCE. Rides [[SessionScope.frame]] — the generic
     * per-(session, dataset, key) memo — rather than CacheManager
     * plan-matching, which silently breaks the moment any caller
     * unpersists or reshapes the shared subplan (the r14 kNN lesson).
@@ -330,8 +328,7 @@ object TextAnalysis {
     * checkpoint reads the un-persisted plan: a persist in front of it
     * would only write a cache copy the checkpoint then copies again. */
   private[graft] def bm25TfMemo(s: SparkSession, d: String): DataFrame =
-    SessionScope.memo(s, d, "bm25tf")(
-      bm25TfPlan(s, Tables.documents(s, d)).localCheckpoint())
+    SessionScope.frame(s, d, "bm25tf", Checkpointed)(bm25TfPlan(s, Tables.documents(s, d)))
 
   /** The impacts index for one idf form over the MEMOIZED tf frame —
     * the df fold and idf×tfn projection stay LAZY (r20, measured): each
@@ -672,17 +669,25 @@ object TextAnalysis {
     * [[probeLexArm]]) — a micro-batch's probes are not the session
     * constant. */
   private[graft] def probeScoredMemo(s: SparkSession, d: String): DataFrame =
-    SessionScope.memo(s, d, "bm25sc_sq") {
+    SessionScope.frame(s, d, "bm25sc_sq", Checkpointed) {
       bm25Scores(bm25ImpactsIdfMemoTf(s, d, sqrtIdf),
           bm25ProbeTerms(Tables.documents(s, d)))
-        .localCheckpoint()
     }
+
+  /** t16's scored frame: [[probeScoredMemo]]'s scoring under t16's
+    * integer bit-length idf. Cached because the final orderBy's range
+    * partitioner runs a SAMPLING job over its input, which would
+    * otherwise recompute the whole fan-out aggregation a second time
+    * (measured ~2× the query); memoized because a session's later t16
+    * calls re-read the same constant. Persisted, so t16's plan keeps
+    * its shape. */
+  private[graft] def bm25ScoredMemo(s: SparkSession, d: String): DataFrame =
+    SessionScope.frame(s, d, "bm25sc_bl", Persisted)(
+      bm25Scores(bm25ImpactsIdfMemoTf(s, d, bitLenIdf), bm25ProbeTerms(Tables.documents(s, d))))
 
   /** See [[probeScoredMemo]]. */
   private[graft] def rrfLexArmMemo(s: SparkSession, d: String): DataFrame =
-    SessionScope.memo(s, d, "rrf_lex") {
-      rrfLexArm(probeScoredMemo(s, d)).localCheckpoint()
-    }
+    SessionScope.frame(s, d, "rrf_lex", Checkpointed)(rrfLexArm(probeScoredMemo(s, d)))
 
   /** The embedding frame `(vec_id, v, nrm)` the retrieval family scores
     * against — one definition for the memo builds and the catalog
@@ -696,21 +701,18 @@ object TextAnalysis {
 
   /** See [[probeScoredMemo]]. */
   private[graft] def rrfVecExactMemo(s: SparkSession, d: String): DataFrame =
-    SessionScope.memo(s, d, "rrf_vecx") {
+    SessionScope.frame(s, d, "rrf_vecx", Checkpointed) {
       import s.implicits._
       rrfVecArmBrute(
           Tables.documents(s, d).filter($"doc_id" % 100 === 0),
           embWithNorms(s, d))
-        .localCheckpoint()
     }
 
   /** See [[probeScoredMemo]]. t30 reads the slate's (eval_id, train_id)
     * set; t31 additionally grades by its rank column. */
   private[graft] def rrfExactSlateMemo(s: SparkSession, d: String): DataFrame =
-    SessionScope.memo(s, d, "rrf_exsl") {
-      rrfFuseRanks(rrfLexArmMemo(s, d), rrfVecExactMemo(s, d))
-        .localCheckpoint()
-    }
+    SessionScope.frame(s, d, "rrf_exsl", Checkpointed)(
+      rrfFuseRanks(rrfLexArmMemo(s, d), rrfVecExactMemo(s, d)))
 
   /** t30's recall census for the SERVED fusion — t27's ablation
     * discipline applied to the index swap: per embedded eval probe,
@@ -859,15 +861,9 @@ object TextAnalysis {
     * top-5 is the round's argmax pair, the same row the old
     * `orderBy(cnt desc, pair).limit(1)` produced. */
   private[graft] def bpeRound5(s: SparkSession, d: String, i: Int): DataFrame =
-    SessionScope.memo(s, d, s"bpe_t5_$i") {
-      // localCheckpoint, NOT persist: a memoized frame's persist would
-      // register in the CacheManager exactly once and the first
-      // sweep-side clearCache() would strip it permanently (the ed2
-      // lesson in Graph.scala); the eager checkpoint makes each round's
-      // 5-row table an RDD-backed LogicalRDD that survives cache sweeps
-      // and keeps every consumer plan round-local.
-      bpeRound5Build(s, d, i).localCheckpoint()
-    }
+    // Checkpointed: each round's 5-row table is an RDD-backed LogicalRDD
+    // that keeps every consumer plan round-local
+    SessionScope.frame(s, d, s"bpe_t5_$i", Checkpointed)(bpeRound5Build(s, d, i))
 
   /** The UNCHECKPOINTED round-`i` top-5 build — the plan
     * `PlanShapeSpec`'s training-shape guard inspects (the query plans
@@ -912,10 +908,8 @@ object TextAnalysis {
     * training executes at most once per session (a cache read when t12
     * has already run, the full 3-scan replay otherwise). */
   private[graft] def bpeWinner(s: SparkSession, d: String, i: Int): DataFrame =
-    SessionScope.memo(s, d, s"bpe_w$i") {
-      import s.implicits._
-      bpeRound5(s, d, i).filter($"rnk" === 1).select($"pair").localCheckpoint()
-    }
+    SessionScope.frame(s, d, s"bpe_w$i", Checkpointed)(
+      bpeRound5(s, d, i).filter(col("rnk") === 1).select(col("pair")))
 
   /** t09/t21's shared sketch input: the distinct (source, 60-bit shingle
     * hash) set, hashed IN THE SCAN STAGE so the one corpus-wide distinct
@@ -924,7 +918,7 @@ object TextAnalysis {
     * and its sketch from it; t21 feeds sketches AND the exact pairwise
     * overlap. */
   private def kmvDistinctHashes(s: SparkSession, d: String): DataFrame =
-    SessionScope.memo(s, d, "kmv_dm") {
+    SessionScope.frame(s, d, "kmv_dm", Checkpointed) {
       // r19: memoized localCheckpoint instead of a per-invocation persist
       // — t09 and t21 previously shared the corpus-wide distinct only via
       // CacheManager plan-matching (and re-ran it whenever a sweep
@@ -939,7 +933,6 @@ object TextAnalysis {
         .select($"source",
           conv(substring(md5($"sg".cast("binary")), 1, 15), 16, 10).cast("long").as("m"))
         .distinct()
-        .localCheckpoint()
     }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1012,9 +1005,8 @@ object TextAnalysis {
       val k = 64
       val dm = kmvDistinctHashes(s, d)
       val dh = dm.select($"source", shiftright($"m", 32).as("h")).distinct()
-      val bk = graft.operators.TopK.perKey(dh, $"source", Seq($"h"), k, saltFrom = $"h")
-        .select($"source", $"h")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val bk = SessionScope.cache(graft.operators.TopK.perKey(dh, $"source", Seq($"h"), k, saltFrom = $"h")
+        .select($"source", $"h"))
       def estCol(nObs: Column, hk: Column): Column =
         when(nObs < k, nObs.cast("double"))
           .otherwise(lit((k - 1).toDouble * (1L << 28).toDouble) / hk.cast("double"))
@@ -1129,11 +1121,10 @@ object TextAnalysis {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d)
-      val tf = docs.select($"doc_id",
+      val tf = SessionScope.cache(docs.select($"doc_id",
           explode(graft.functions.WordCounts(split(trim($"text"), Tok.Ws)))
             .as("wc"))
-        .select($"doc_id", $"wc.t".as("word"), $"wc.tf".as("tf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select($"doc_id", $"wc.t".as("word"), $"wc.tf".as("tf")))
       val df = tf.groupBy($"word").agg(count(lit(1)).as("df"))
       val n = docs.agg(count(lit(1)).as("n_docs"))
       tf.join(broadcast(df), "word")
@@ -1449,20 +1440,8 @@ object TextAnalysis {
     // integer-sum) partials and top-3 is the salted TopK.
     "t16_bm25_retrieval" -> { (s, d) =>
       import s.implicits._
-      val docs = Tables.documents(s, d)
-      // the tokenized tf frame is the memoized checkpointed session
-      // constant (r20); the df/idf derivation stays lazy — see
-      // bm25ImpactsIdfMemoTf for why it is not its own memo
-      val post = bm25ImpactsIdfMemoTf(s, d, bitLenIdf)
-      // distinct query terms per probe item (ShingleArr width 1)
-      val q = bm25ProbeTerms(docs)
-      // persisted: the final orderBy's range partitioner runs a SAMPLING
-      // job over its input, which would otherwise recompute the whole
-      // fan-out aggregation a second time (measured ~2× the query)
-      val scored = bm25Scores(post, q)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       graft.operators.TopK.perKey(
-          scored, $"eval_id", Seq($"sfx".desc, $"train_id"), 3, saltFrom = $"train_id")
+          bm25ScoredMemo(s, d), $"eval_id", Seq($"sfx".desc, $"train_id"), 3, saltFrom = $"train_id")
         .select($"eval_id", $"rn".as("rank"), $"train_id",
           round($"sfx".cast("double") / lit(1e6), 6).as("bm25"))
         .orderBy($"eval_id", $"rank")
@@ -1887,10 +1866,9 @@ object TextAnalysis {
     // global stats row broadcast — the corpus never re-scans.
     "t19_source_drift" -> { (s, d) =>
       import s.implicits._
-      val sc = Tables.documents(s, d)
+      val sc = SessionScope.cache(Tables.documents(s, d)
         .select($"source", explode(split(trim($"text"), Tok.Ws)).as("wd"))
-        .groupBy($"source", $"wd").agg(count(lit(1)).as("c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy($"source", $"wd").agg(count(lit(1)).as("c")))
       val cc = sc.groupBy($"wd").agg(sum($"c").as("cg"))
       val st = cc.agg(count(lit(1)).as("v"), sum($"cg").as("n"))
       val ss = sc.groupBy($"source")
@@ -1976,10 +1954,9 @@ object TextAnalysis {
     "t20_countmin_heavyhitters" -> { (s, d) =>
       import s.implicits._
       val cmsW = 16
-      val wc = Tables.documents(s, d)
+      val wc = SessionScope.cache(Tables.documents(s, d)
         .select(explode(split(trim($"text"), Tok.Ws)).as("word"))
-        .groupBy($"word").agg(count(lit(1)).as("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy($"word").agg(count(lit(1)).as("cnt")))
       // row-r column index: 28-bit slice of md5(word), rows use disjoint
       // hex windows → 4 independent-enough hash functions, engine-exact
       def colR(r: Int): Column =

@@ -3,7 +3,6 @@ package graft.operators
 import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed connected components over an undirected edge list, labeling
   * every node with the MINIMUM node id reachable from it (the "keep the
@@ -99,8 +98,7 @@ object ConnectedComponents {
       // level 1 runs at the input's own parallelism: mapPartitions fuses
       // into the producing stage, no pre-probe of the raw plan (which
       // under AQE would execute its stages just to count partitions)
-      val stars = cur.mapPartitions(contract)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val stars = graft.core.SessionScope.cache(cur.mapPartitions(contract))
       val n = stars.count() // materializes the level; the only driver sync
       // exact post-materialization partition count (cheap on the cached
       // plan) — drives the fan-in schedule instead of a parallelism guess
@@ -116,10 +114,10 @@ object ConnectedComponents {
       } else {
         cur = stars.repartition(math.max(1, parts / fanIn))
       }
-      prev.foreach(_.unpersist())
+      prev.foreach(graft.core.SessionScope.release)
       prev = Some(stars)
     }
-    prev.foreach(_.unpersist())
+    prev.foreach(graft.core.SessionScope.release)
     done.toDF("node", "lbl")
   }
 }

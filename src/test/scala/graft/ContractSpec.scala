@@ -5,9 +5,11 @@ import scala.jdk.CollectionConverters._
 /** Driver-contract guard: the shapes the harness relies on.
   *  - `entry` returns rows at sf0.001 (t1 smoke);
   *  - every `oracleSql` key has a matching query;
-  *  - every registered query executes and returns rows at sf0.001;
+  *  - every registered query executes and returns rows at sf0.001, and
+  *    leaves no CacheManager entry after the drain but a named memo's;
   *  - per-session state lives only in `graft.core.SessionScope`, and
-  *    per-call persists go through its `cache` (no cleanup handles);
+  *    every persist goes through it (no cleanup handles, no raw
+  *    `.persist(`/`.cache()` in catalog code);
   *  - the runner mains share one session builder and CPU clock
   *    (`graft.Runner`).
   */
@@ -89,11 +91,29 @@ class ContractSpec extends SparkSuite {
   }
 
   test("every registered query executes and returns rows at sf0.001") {
+    // after each query's drain, the only CacheManager entries left are the
+    // Persisted memo frames: a later query reads nothing of an earlier
+    // one's except through a named memo (entries other suites left on
+    // the shared session are cleared first, so suite order cannot matter)
+    val cm = spark.sharedState.cacheManager
+    cm.clearCache()
+    val entries = classOf[org.apache.spark.sql.execution.CacheManager].getDeclaredField("cachedData")
+    entries.setAccessible(true)
+    def unowned: Int = {
+      val owned = graft.core.SessionScope.persistedFrames(spark)
+        .flatMap(f => cm.lookupCachedData(f.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]))
+      entries.get(cm).asInstanceOf[Seq[AnyRef]].count(e => !owned.exists(_ eq e))
+    }
+    var leaked = Option.empty[String]
     val empty = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val n = fn(spark, sf).count()
+      graft.core.SessionScope.drain(spark)
+      if (leaked.isEmpty && unowned > 0) leaked = Some(name)
       if (n == 0) Some(name) else None
     }
     assert(empty.isEmpty, s"queries with zero rows at sf0.001: $empty")
+    assert(leaked.isEmpty, s"${leaked.mkString} left a CacheManager entry after the drain that " +
+      "no SessionScope.frame memo owns: cache it per call or make it a named memo")
   }
 
   /** Every main source file as (path, text), for the one-owner guards. */
@@ -124,6 +144,22 @@ class ContractSpec extends SparkSuite {
     }
     assert(offenders.isEmpty,
       s"cache per-call persists with SessionScope.cache instead: ${offenders.mkString("; ")}")
+  }
+
+  test("every persist has one owner: no .persist( or .cache() outside SessionScope and the per-batch owners") {
+    // a frame is SessionScope.cache'd per call or a SessionScope.frame
+    // memo; Emitter and RouteRegistry release their per-batch persists
+    // inside the batch. Comment lines don't count.
+    val owners = Seq("graft/core/SessionScope.scala", "graft/produce/Emitter.scala",
+      "graft/route/RouteRegistry.scala")
+    val offenders = mainSources.filterNot(f => owners.exists(f._1.endsWith)).flatMap { case (f, src) =>
+      src.linesIterator.zipWithIndex.collect {
+        case (l, i) if !Seq("//", "*", "/*").exists(l.trim.startsWith) &&
+            (l.contains(".persist(") || l.contains(".cache()")) => s"$f:${i + 1}"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"${offenders.size} raw persists; use SessionScope.cache or SessionScope.frame: ${offenders.mkString("; ")}")
   }
 
   test("runners share one core: only graft/Runner.scala builds a session or defines cpuNanos") {

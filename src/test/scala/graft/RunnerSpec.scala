@@ -64,6 +64,23 @@ class RunnerSpec extends SparkSuite {
     assert(e.getMessage.contains("nope_1") && e.getMessage.contains("nope_2"), e.getMessage)
   }
 
+  test("the idle reference is read from the working tree the run starts in") {
+    val root = java.nio.file.Files.createTempDirectory("graft_idle_ref_").toFile
+    val tools = new java.io.File(root, "tools")
+    assert(Bench.idleRef(1, root, None) == -1.0, "no reference file reads -1")
+    tools.mkdirs()
+    java.nio.file.Files.writeString(new java.io.File(tools, "bench_idle_ref.txt").toPath, "2.5\n")
+    assert(Bench.idleRef(1, root, None) == 2.5)
+    assert(Bench.idleRef(3, root, None) == 2.5, "reps3 falls back to the default ref")
+    java.nio.file.Files.writeString(new java.io.File(tools, "bench_idle_ref_reps3.txt").toPath, "3.5")
+    assert(Bench.idleRef(1, root, None) == 2.5 && Bench.idleRef(3, root, None) == 3.5)
+    assert(Bench.idleRef(3, root, Some(new java.io.File(tools, "bench_idle_ref.txt").getPath)) == 2.5,
+      "an explicit reference file wins")
+    // the default root is the working directory, i.e. this checkout
+    val here = scala.io.Source.fromFile("tools/bench_idle_ref.txt")
+    try assert(Bench.idleRef(1, refFile = None) == here.mkString.trim.toDouble) finally here.close()
+  }
+
   test("the full record keeps its key order with steal_s last; the summary line's keys are unchanged") {
     val (full, summary) = sweep(Map("q16_route_count" -> SparkEntry.queries("q16_route_count")), reps = 1)
     assert(full.fieldNames.asScala.toSeq == Seq("metric", "value", "unit", "failed",

@@ -24,7 +24,12 @@ import graft.SparkSuite
   *      directory on disk (frames may still read it lazily);
   *   4. one context-end listener per SparkContext, however many sessions;
   *   5. a cached frame stays persisted until its own session's drain,
-  *      which counts and releases it.
+  *      which counts and releases it;
+  *   6. a frame memo builds once; its Storage decides whether a
+  *      `clearCache` leaves it (Checkpointed) or the next read registers
+  *      it again (Persisted); only evict releases a Persisted frame, and
+  *      a frame a Checkpointed build caches lives only until the
+  *      checkpoint.
   */
 class SessionScopeSpec extends SparkSuite {
 
@@ -124,6 +129,38 @@ class SessionScopeSpec extends SparkSuite {
     assert((persisted & theirIds).isEmpty,
       s"drain(other) left its frame persisted: ${persisted & theirIds}")
     SessionScope.evict(other)
+  }
+
+  test("frame memos: built once; Checkpointed survives clearCache, Persisted registers again; drain keeps both, evict releases") {
+    val s = spark.newSession()
+    var builds = 0
+    var scratch: org.apache.spark.sql.DataFrame = null
+    def cp = SessionScope.frame(s, "/d", "cp", SessionScope.Checkpointed) {
+      builds += 1
+      scratch = SessionScope.cache(s.range(0, 50).selectExpr("id % 7 AS k"))
+      scratch.union(scratch).repartition(2)
+    }
+    def ps = SessionScope.frame(s, "/d", "ps", SessionScope.Persisted) {
+      builds += 1; s.range(0, 100).selectExpr("id % 5 AS k").repartition(2)
+    }
+    val (c, p) = (cp, ps)
+    assert((cp eq c) && (ps eq p) && builds == 2, "each key builds once")
+    assert(c.queryExecution.analyzed.getClass.getSimpleName == "LogicalRDD",
+      "a Checkpointed frame is cut to its checkpoint")
+    assert(scratch.storageLevel == StorageLevel.NONE,
+      "a frame its build cached is released once the checkpoint materializes")
+    assert(p.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    assert(SessionScope.persistedFrames(s).map(_.schema) == Seq(p.schema))
+    assert(c.count() == 100 && p.count() == 100)
+    s.sharedState.cacheManager.clearCache()
+    assert(p.storageLevel == StorageLevel.NONE)
+    assert(ps.storageLevel == StorageLevel.MEMORY_AND_DISK, "the next read registers it again")
+    assert(c.count() == 100 && builds == 2, "the checkpoint survives the clear, nothing rebuilds")
+    assert(SessionScope.drain(s) == 0, "memos are not per-call handles")
+    assert(p.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    SessionScope.evict(s)
+    assert(p.storageLevel == StorageLevel.NONE, "evict releases the Persisted frames")
+    assert(SessionScope.persistedFrames(s).isEmpty)
   }
 
   test("path is stable within a session and keyed by family + dataset") {

@@ -15,12 +15,12 @@ import graft.core.SessionScope
   * Two properties the r19 optimization round learned the hard way:
   *   1. build-once instance identity — every caller gets the SAME
   *      DataFrame (the `SessionScope.memo` contract);
-  *   2. cache-sweep survival — the memoized frames must be RDD-backed
-  *      (localCheckpoint), because a memoized PERSIST registers in the
-  *      CacheManager exactly once and the first sweep-side clearCache()
-  *      strips it permanently: measured as g05's shuffle ceiling
-  *      tripping 1.38 → 3.5 MB when ed2 was memoized persist-only
-  *      (every loop round re-ran the repartition exchange).
+  *   2. cache-sweep survival — these memos are
+  *      `SessionScope.Checkpointed` (RDD-backed), so a sweep-side
+  *      clearCache() cannot strip them. A persist registered once and
+  *      never again was measured as g05's shuffle ceiling tripping
+  *      1.38 → 3.5 MB (every loop round re-ran the repartition exchange);
+  *      `SessionScope.Persisted` frames register again on their next read.
   */
 class SharedBuildMemoSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"

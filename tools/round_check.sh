@@ -3,7 +3,8 @@
 #
 #   1. sbt compile                      (must stay green)
 #   2. sbt test                         (every spec, incl. the shuffle
-#                                        ceilings and plan guards)
+#                                        ceilings and plan guards; then
+#                                        the g08 ceiling run alone)
 #   3. Verify @ sf0.01 + DuckDB oracle  (the correctness gate: every
 #                                        query hash-checked) + the
 #                                        benchmark harness's smoke test
@@ -40,6 +41,9 @@ sbt -batch compile || exit 1
 
 echo "=== gate 2/4: test suite ==="
 sbt -batch test || exit 2
+# the g08 ceiling alone, in a fresh JVM: a pass that depends on an
+# earlier test having built the memo it rides cannot hide in the suite
+sbt -batch "testOnly graft.ShuffleCeilingSpec -- -z g08" || exit 2
 
 echo "=== gate 3/4: Verify @ sf0.01 + DuckDB oracle + perfbench + Bench smoke ==="
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/round_check_verify" \
