@@ -2,14 +2,17 @@ package graft.produce
 
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
+import scala.annotation.tailrec
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 
+import org.apache.spark.{NarrowDependency, RangeDependency}
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, Row}
 import org.apache.spark.sql.functions._
 
 import graft.core.{EngineConfig, Envelope}
@@ -36,22 +39,29 @@ final case class EmittedBatch(topic: String, values: Seq[String])
   *  - **Emit scope** (one job per flush): [[scoped]] defers every emit
   *    of the calling thread — enriched and validated eagerly, so analysis
   *    errors still surface at the call — and flushes them at the end as
-  *    ONE `union` of slot-tagged `(slot, topic, value)` frames. The router
+  *    ONE union of slot-tagged `(slot, topic, value)` frames. The router
   *    scopes each micro-batch, so all its routes' emits and its DLQ run as
   *    one Spark job instead of one job per call; an emit outside any
-  *    scope is simply a one-slot flush.
+  *    scope is simply a one-slot flush. The flush runs one task per
+  *    child-partition index: task j runs partition j of every slot frame,
+  *    in call order. The router's frames all read one persisted batch, so
+  *    a batch over P source partitions runs P tasks, and each source
+  *    partition is shipped to the executors once per flush rather than
+  *    once per emit. That is the gain where the source partitions carry
+  *    the rows (a memory stream, a local frame); a Kafka source partition
+  *    carries only an offset range, so there it saves task launches only.
   *  - **Kafka sink** (O2) + **multi-cluster replication** (O3): a flush
-  *    writes its union once per host, each row to its own `topic` column
-  *    (the sink options set no `topic`). With more than one host the union
+  *    writes its frame once per host, each row to its own `topic` column
+  *    (the sink options set no `topic`). With more than one host the frame
   *    is computed once (`persist`); the Kafka connector pools producers
   *    per executor — the reference's hand-rolled connection pool + TTL
   *    (O17) is engine-managed (`spark.kafka.producer.cache.timeout`).
-  *    Rows of different emits in one flush are written by concurrent
-  *    tasks, so Kafka order holds within an emit, not across the emits of
-  *    one flush. A failed write under isolation is retried emit by emit
-  *    against that host only; rows of the failed job's tasks that had
-  *    already finished reach that host twice (at-least-once).
-  *  - **In-memory test sink** (O15): `onlyTesting` collects the union
+  *    Write order: within one source partition, one task writes the emits
+  *    in call order; across source partitions there is no order. A failed
+  *    write under isolation is retried emit by emit against that host
+  *    only; rows of the failed job's tasks that had already finished reach
+  *    that host twice (at-least-once).
+  *  - **In-memory test sink** (O15): `onlyTesting` collects the flush
   *    once and splits it back per slot, in call order, so each emit still
   *    captures its own [[EmittedBatch]]; `getParsedEmittedEvents` can
   *    replicate the reference's per-batch `.reverse()` quirk behind
@@ -248,17 +258,17 @@ final class Emitter(
     case slots => slots += slot
   }
 
-  /** Tag each slot's frame with its index and run the union of all of them
-    * as one job: one `collect` in `onlyTesting` mode, otherwise one write
-    * per host. Capture splits the collected rows back per slot: a union
-    * keeps each child's rows in their own order. */
+  /** Tag each slot's frame with its index and run all of them as one
+    * [[flush]] frame: one `collect` in `onlyTesting` mode, otherwise one
+    * write per host. Capture splits the collected rows back per slot: the
+    * flush keeps each slot's rows in their own order. */
   private def write(slots: Seq[Slot], isolate: Boolean): Unit = {
     val parts = slots.zipWithIndex.flatMap { case (s, i) =>
       s.frame.map(f => s -> f.select(lit(i).as("slot"), lit(s.topic).as("topic"), col("value")))
     }
     if (config.onlyTesting) {
       val rows = mutable.ArrayBuffer.empty[Row]
-      if (parts.nonEmpty) attempt(parts, union(parts), isolate)(rows ++= _.collect())
+      if (parts.nonEmpty) attempt(parts, flush(parts), isolate)(rows ++= _.collect())
       val bySlot = rows.toSeq.groupMap(_.getInt(0))(_.getString(2))
       val batches = slots.zipWithIndex.flatMap { case (s, i) =>
         val values = if (s.frame.isEmpty) s.docs else bySlot.getOrElse(i, Nil)
@@ -267,21 +277,28 @@ final class Emitter(
       synchronized { captured ++= batches }
     } else parts.map(_._1.hosts).distinct.foreach { hosts =>
       val mine = parts.filter(_._1.hosts == hosts)
-      val all = union(mine)
       // Multi-cluster replication (O3): compute once, write per host.
       // Exactly-once across clusters is impossible; like the reference these
       // are independent at-least-once sends (SURVEY.md §7.4.7). Each host
       // is isolated on its own, so a failing host never re-writes another.
-      if (hosts.size > 1) all.persist()
+      // The frame is built inside the first attempt: building it can fail.
+      var all: Option[DataFrame] = None
+      def once(): DataFrame = all.getOrElse {
+        val f = flush(mine)
+        if (hosts.size > 1) f.persist()
+        all = Some(f)
+        f
+      }
       try hosts.foreach(host =>
-        attempt(mine, all, isolate)(f => sink(f.select("value", "topic"), config, host)))
-      finally if (hosts.size > 1) all.unpersist()
+        attempt(mine, once(), isolate)(f => sink(f.select("value", "topic"), config, host)))
+      finally if (hosts.size > 1) all.foreach(_.unpersist())
     }
   }
 
-  /** Run `job` on `whole`, the union of `parts`. With `isolate`, if it
-    * fails, run `job` on each part alone and log the parts that fail. */
-  private def attempt(parts: Seq[(Slot, DataFrame)], whole: DataFrame, isolate: Boolean)(
+  /** Run `job` on `whole`, the flush of `parts`. With `isolate`, if
+    * building or running it fails, run `job` on each part alone and log
+    * the parts that fail. */
+  private def attempt(parts: Seq[(Slot, DataFrame)], whole: => DataFrame, isolate: Boolean)(
       job: DataFrame => Unit): Unit =
     try job(whole) catch {
       case _: Exception if isolate && parts.size > 1 =>
@@ -289,7 +306,15 @@ final class Emitter(
       case e: Exception if isolate => logError(s"Emit to ${parts.head._1.topic} failed", e)
     }
 
-  private def union(parts: Seq[(Slot, DataFrame)]): DataFrame = parts.map(_._2).reduce(_ union _)
+  /** The union of `parts` with one task per child-partition index: task j
+    * runs partition j of every part, in part order ([[BySourcePartition]]).
+    * The router's parts all read one persisted batch, so each of its
+    * source partitions is serialized into one task per flush instead of
+    * one per part. */
+  private def flush(parts: Seq[(Slot, DataFrame)]): DataFrame =
+    if (parts.size == 1) parts.head._2
+    else GraftShims.reshapedRows(parts.map(_._2).reduce(_ union _))(rows =>
+      rows.coalesce(rows.getNumPartitions, partitionCoalescer = Some(BySourcePartition)))
 
   private def resolveHosts(overwrite: Option[Seq[String]]): Seq[String] =
     overwrite.filter(_.nonEmpty).getOrElse(config.host +: config.additionalHosts)
@@ -331,6 +356,31 @@ object Emitter {
     * or, for [[Emitter.emitJson]], its literal documents. */
   private final case class Slot(
       topic: String, hosts: Seq[String], frame: Option[DataFrame], docs: Seq[String])
+
+  /** Groups a union's partitions by their index within their own child,
+    * in union order, so group j holds every child's partition j. The key
+    * walks down one-to-one wrappers (`toRdd` wraps the union in a
+    * `SQLExecutionRDD`) to the union's `RangeDependency`s; partitions of
+    * any other lineage keep a group each. Children with fewer partitions
+    * are simply absent from the higher groups. */
+  private object BySourcePartition extends PartitionCoalescer with Serializable {
+    def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] =
+      parent.partitions.groupBy(p => childIndex(parent, p.index)).toArray.sortBy(_._1).map {
+        case (_, ps) =>
+          val g = new PartitionGroup(parent.preferredLocations(ps.head).headOption)
+          g.partitions ++= ps
+          g
+      }
+
+    @tailrec private def childIndex(rdd: RDD[_], p: Int): Int = rdd.dependencies match {
+      case Seq(d: NarrowDependency[_]) if !d.isInstanceOf[RangeDependency[_]] &&
+          d.getParents(p).size == 1 =>
+        childIndex(d.rdd, d.getParents(p).head)
+      case deps =>
+        deps.iterator.collect { case r: RangeDependency[_] => r.getParents(p) }
+          .collectFirst { case Seq(q) => q }.getOrElse(p)
+    }
+  }
 
   private val mapper = new ObjectMapper()
 

@@ -25,9 +25,10 @@ final case class Route(
   * The reference dispatches per message on one Node event loop; here the
   * router builds a **declarative plan** instead:
   *
-  *   Kafka/memory source → single `from_json` pass (parse once, Catalyst
-  *   prunes per route) → malformed-drop filter (O8) → per-route boolean
-  *   `Column` predicate (O10) → handler via `foreachBatch`.
+  *   Kafka/memory source → `from_json` against the merged registry schema
+  *   and the minimal envelope, parsed in full once per batch and persisted
+  *   → malformed-drop filter (O8) → per-route boolean `Column` predicate
+  *   (O10) → handler via `foreachBatch`.
   *
   * Handlers receive a DataFrame of the parsed payload plus the [[Emitter]],
   * so consume→transform→produce pipelines (O14) are just DataFrame
@@ -37,12 +38,18 @@ final case class Route(
   * Scale notes:
   *  - One micro-batch is parsed once and `persist()`ed; N route branches
   *    filter it without re-reading Kafka. Multicast without N consumers.
+  *    The persisted parse is the full one: Catalyst cannot prune a route's
+  *    unused fields out of it.
   *  - One Spark job per micro-batch: the batch runs in one
   *    [[Emitter.scoped]] block, so handlers' emits and the DLQ only plan
   *    their frames, and the scope flushes every route's output as one
   *    union when dispatch ends. The per-batch cost is one job however
   *    many routes are registered (jobs the handlers run themselves, such
   *    as a `count()`, come on top).
+  *  - One task per source partition per batch: the flush runs partition j
+  *    of every route's output and of the DLQ in one task, so a batch
+  *    over P source partitions runs P tasks however many routes are
+  *    registered.
   *  - Route predicates are codegen'd; the reference's O(routes)
   *    interpreted linear scan per message becomes a vectorized filter.
   *  - Source pruning (O11): only routed topics are subscribed.
@@ -104,10 +111,10 @@ final class RouteRegistry(
 
   // ------------------------------------------------------------- dispatch
 
-  /** Parse an envelope batch `(topic: string, value: string)` with one
-    * `from_json` pass; malformed JSON parses to null and is dropped but the
-    * row is still consumed (O7/O8 — same skip-and-commit semantics as the
-    * reference, consumer/legacy-consumer.ts:163-198). */
+  /** Parse an envelope batch `(topic: string, value: string)`; malformed
+    * JSON is dropped but the row is still consumed (O7/O8 — same
+    * skip-and-commit semantics as the reference,
+    * consumer/legacy-consumer.ts:163-198). */
   private val Corrupt = "_corrupt_record"
 
   /** Parse with the corrupt-record marker retained — internal; the marker
@@ -116,11 +123,12 @@ final class RouteRegistry(
     * Two-tier parse: the merged registry schema first; rows it rejects
     * (e.g. a payload field whose JSON type conflicts with another code's
     * registered type) get a second chance against the minimal envelope
-    * schema, so they still route by `code` — with null payload fields and
-    * the raw `value` available for handler-side re-parsing. Only messages
-    * that fail BOTH parses are marked corrupt. This matches the reference,
-    * which JSON.parses every message independently and routes anything
-    * parseable.
+    * schema, so they still route by `code`, with null payload fields.
+    * Handlers do not get the raw `value` to re-parse: [[dispatch]] drops it
+    * from every branch. Only messages that fail BOTH parses are marked
+    * corrupt. This matches the reference, which JSON.parses every message
+    * independently and routes anything parseable. Both `from_json` passes
+    * run on every row.
     *
     * Null values (Kafka tombstones) and empty/whitespace-only values —
     * where `from_json` returns a null STRUCT instead of a corrupt-marked

@@ -1,8 +1,9 @@
 package graft.route
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskStart}
 import org.apache.spark.sql.{DataFrame, GraftShims}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -302,6 +303,54 @@ class RouteRegistrySpec extends SparkSuite {
     } finally sc.removeSparkListener(listener)
     assert(jobs.get == 1, s"${reg.routeCount} routes + DLQ ran ${jobs.get} jobs")
     assert(reg.emitter.getEmittedEvents.nonEmpty)
+  }
+
+  test("one task per source partition: the routes' emits and the DLQ of a batch over P partitions run P tasks") {
+    import spark.implicits._
+    val reg = registry(oneJobConfig(), oneJobRoutes)
+    val sources = 3
+    val batch = spark.sparkContext.parallelize(mixed, sources).toDF("topic", "value")
+    val group = "route-one-task-per-partition"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val taskStages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          e.stageIds.foreach(stages.add)
+      override def onTaskStart(e: SparkListenerTaskStart): Unit = taskStages.add(e.stageId)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one routed batch")
+      try reg.process(batch) finally sc.clearJobGroup()
+      GraftShims.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    val tasks = taskStages.asScala.count(stages.contains)
+    assert(tasks == sources, s"${reg.routeCount} routes + DLQ over $sources partitions ran $tasks tasks")
+    assert(reg.emitter.getEmittedEvents == perRoute(reg, oneJobRoutes, mixed))
+  }
+
+  test("a route whose handler shuffles captures what the per-route sequence gives, and loses only its own rows when the shuffle fails") {
+    import spark.implicits._
+    val routes = oneJobRoutes :+ Route("t-a", None, (df, em) =>
+      em.emit(df.groupBy(col("code").as("c")).count().orderBy("c"), "out-g"))
+    val reg = registry(oneJobConfig(), routes)
+    reg.process(mixed.toDF("topic", "value"))
+    val got = reg.emitter.getEmittedEvents
+    assert(got.filter(_.topic == "out-g").flatMap(_.values).size == 2)
+    assert(got == perRoute(reg, routes, mixed))
+
+    // an adaptive plan runs its shuffle stage while the flush frame is
+    // built: a failure there still loses only the failing route's rows
+    val failing = oneJobRoutes :+ Route("t-a", None, (df, em) => em.emit(
+      df.select(coalesce(when(col("n") === 5, raise_error(lit("bad row"))), col("n")).as("n"))
+        .groupBy("n").count(), "out-g"))
+    val lenient = registry(oneJobConfig(), failing)
+    lenient.process(mixed.toDF("topic", "value"))
+    val want = perRoute(lenient, failing, mixed)
+    assert(!want.exists(_.topic == "out-g"))
+    assert(lenient.emitter.getEmittedEvents == want)
   }
 
   test("one-job flush keeps the per-route emit sequence: topics, batch boundaries, value order") {

@@ -3,7 +3,8 @@
 #
 #   1. sbt compile                      (must stay green)
 #   2. sbt test                         (every spec, incl. the shuffle
-#                                        ceilings and plan guards; then
+#                                        ceilings and plan guards, with
+#                                        its wall time printed; then
 #                                        the g08 ceiling run alone)
 #   3. Verify @ sf0.01 + DuckDB oracle  (the correctness gate: every
 #                                        query hash-checked) + the
@@ -40,7 +41,11 @@ echo "=== gate 1/4: compile ==="
 sbt -batch compile || exit 1
 
 echo "=== gate 2/4: test suite ==="
+# the suite's wall time is printed so a change can report it next to its
+# parent's (the tier-1 suite must not slow down unnoticed)
+t0=$(date +%s)
 sbt -batch test || exit 2
+echo "gate 2: sbt -batch test took $(( $(date +%s) - t0 )) s"
 # the g08 ceiling alone, in a fresh JVM: a pass that depends on an
 # earlier test having built the memo it rides cannot hide in the suite
 sbt -batch "testOnly graft.ShuffleCeilingSpec -- -z g08" || exit 2
