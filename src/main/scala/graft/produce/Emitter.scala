@@ -13,7 +13,9 @@ import org.apache.spark.{NarrowDependency, RangeDependency}
 import org.apache.spark.internal.Logging
 import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
 import org.apache.spark.sql.{Column, DataFrame, GraftShims, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.core.{EngineConfig, Envelope}
 import graft.functions.ToUpperCamelCase
@@ -44,7 +46,7 @@ final case class EmittedBatch(topic: String, values: Seq[String])
   *    one Spark job instead of one job per call; an emit outside any
   *    scope is simply a one-slot flush. The flush runs one task per
   *    child-partition index: task j runs partition j of every slot frame,
-  *    in call order. The router's frames all read one persisted batch, so
+  *    in call order. The router's frames all read one cached batch, so
   *    a batch over P source partitions runs P tasks, and each source
   *    partition is shipped to the executors once per flush rather than
   *    once per emit. That is the gain where the source partitions carry
@@ -53,9 +55,11 @@ final case class EmittedBatch(topic: String, values: Seq[String])
   *  - **Kafka sink** (O2) + **multi-cluster replication** (O3): a flush
   *    writes its frame once per host, each row to its own `topic` column
   *    (the sink options set no `topic`). With more than one host the frame
-  *    is computed once (`persist`); the Kafka connector pools producers
-  *    per executor — the reference's hand-rolled connection pool + TTL
-  *    (O17) is engine-managed (`spark.kafka.producer.cache.timeout`).
+  *    is computed once: its rows are cached under its plan leaf, not as a
+  *    CacheManager entry, and released after the last host. The Kafka
+  *    connector pools producers per executor — the reference's
+  *    hand-rolled connection pool + TTL (O17) is engine-managed
+  *    (`spark.kafka.producer.cache.timeout`).
   *    Write order: within one source partition, one task writes the emits
   *    in call order; across source partitions there is no order. A failed
   *    write under isolation is retried emit by emit against that host
@@ -282,16 +286,18 @@ final class Emitter(
       // are independent at-least-once sends (SURVEY.md §7.4.7). Each host
       // is isolated on its own, so a failing host never re-writes another.
       // The frame is built inside the first attempt: building it can fail.
+      // With more than one host its rows are cached under its plan leaf.
+      var kept: RDD[InternalRow] = null
       var all: Option[DataFrame] = None
       def once(): DataFrame = all.getOrElse {
-        val f = flush(mine)
-        if (hosts.size > 1) f.persist()
+        val keep = (rows: RDD[InternalRow]) => { kept = cachedRows(rows); kept }
+        val f = flush(mine, if (hosts.size > 1) Some(keep) else None)
         all = Some(f)
         f
       }
       try hosts.foreach(host =>
         attempt(mine, once(), isolate)(f => sink(f.select("value", "topic"), config, host)))
-      finally if (hosts.size > 1) all.foreach(_.unpersist())
+      finally if (kept != null) kept.unpersist(blocking = false)
     }
   }
 
@@ -308,13 +314,19 @@ final class Emitter(
 
   /** The union of `parts` with one task per child-partition index: task j
     * runs partition j of every part, in part order ([[BySourcePartition]]).
-    * The router's parts all read one persisted batch, so each of its
+    * The router's parts all read one cached batch, so each of its
     * source partitions is serialized into one task per flush instead of
-    * one per part. */
-  private def flush(parts: Seq[(Slot, DataFrame)]): DataFrame =
-    if (parts.size == 1) parts.head._2
-    else GraftShims.reshapedRows(parts.map(_._2).reduce(_ union _))(rows =>
-      rows.coalesce(rows.getNumPartitions, partitionCoalescer = Some(BySourcePartition)))
+    * one per part. `keep` wraps the grouped rows (the multi-host write
+    * caches them there); a lone part with nothing to keep is its own
+    * frame. */
+  private def flush(
+      parts: Seq[(Slot, DataFrame)],
+      keep: Option[RDD[InternalRow] => RDD[InternalRow]] = None): DataFrame =
+    if (parts.size == 1 && keep.isEmpty) parts.head._2
+    else GraftShims.reshapedRows(parts.map(_._2).reduce(_ union _)) { rows =>
+      val grouped = rows.coalesce(rows.getNumPartitions, partitionCoalescer = Some(BySourcePartition))
+      keep.fold(grouped)(_(grouped))
+    }
 
   private def resolveHosts(overwrite: Option[Seq[String]]): Seq[String] =
     overwrite.filter(_.nonEmpty).getOrElse(config.host +: config.additionalHosts)
@@ -351,6 +363,13 @@ object Emitter {
     * decide between a per-batch `current_timestamp()` expression (wall
     * clock) and a frozen literal (injected test clock). */
   val WallClock: () => Instant = () => Instant.now()
+
+  /** `rows` cached for reuse within one batch, released by the caller with
+    * `unpersist`: the per-batch owners (the router's parsed batch, the
+    * multi-host flush) cache rows under a plan leaf this way, never as a
+    * CacheManager entry. `toRdd` reuses its row buffers, hence the copy. */
+  private[graft] def cachedRows(rows: RDD[InternalRow]): RDD[InternalRow] =
+    rows.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
 
   /** One deferred emit: its topic and hosts, and either its `value` frame
     * or, for [[Emitter.emitJson]], its literal documents. */

@@ -3,7 +3,9 @@ package graft.route
 import scala.collection.mutable
 
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, GraftShims}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -26,8 +28,8 @@ final case class Route(
   * router builds a **declarative plan** instead:
   *
   *   Kafka/memory source → `from_json` against the merged registry schema
-  *   and the minimal envelope, parsed in full once per batch and persisted
-  *   → malformed-drop filter (O8) → per-route boolean `Column` predicate
+  *   and the minimal envelope, parsed in full once per batch and cached as
+  *   rows → malformed-drop filter (O8) → per-route boolean `Column` predicate
   *   (O10) → handler via `foreachBatch`.
   *
   * Handlers receive a DataFrame of the parsed payload plus the [[Emitter]],
@@ -36,10 +38,14 @@ final case class Route(
   * model.
   *
   * Scale notes:
-  *  - One micro-batch is parsed once and `persist()`ed; N route branches
-  *    filter it without re-reading Kafka. Multicast without N consumers.
-  *    The persisted parse is the full one: Catalyst cannot prune a route's
-  *    unused fields out of it.
+  *  - One micro-batch is parsed once and its rows are cached
+  *    (`MEMORY_AND_DISK`) under one `LogicalRDD` plan leaf, released when
+  *    the batch ends; N route branches filter that leaf without re-reading
+  *    Kafka. Multicast without N consumers, and without a CacheManager
+  *    entry: each branch plans `LogicalRDD → Filter → handler` rather than
+  *    re-analyzing the parse. The cached parse is the full one: Catalyst
+  *    cannot prune a route's unused fields out of it. Its raw `value` is
+  *    kept only on corrupt rows, where the DLQ reads it.
   *  - One Spark job per micro-batch: the batch runs in one
   *    [[Emitter.scoped]] block, so handlers' emits and the DLQ only plan
   *    their frames, and the scope flushes every route's output as one
@@ -195,9 +201,12 @@ final class RouteRegistry(
   def process(envelopes: DataFrame): Unit = {
     if (config.strategy == Strategy.OneByOne) processOneByOne(envelopes)
     else {
-      val all = parseAll(envelopes).persist()
-      try route(all)
-      finally { all.unpersist(); () }
+      // Only the DLQ reads the raw value, and only for corrupt rows.
+      val batch = parseAll(envelopes)
+        .withColumn("value", when(col(Corrupt).isNotNull, col("value")))
+      var rows: RDD[InternalRow] = null
+      try route(GraftShims.reshapedRows(batch) { r => rows = Emitter.cachedRows(r); rows })
+      finally if (rows != null) rows.unpersist(blocking = false)
     }
   }
 
@@ -227,7 +236,7 @@ final class RouteRegistry(
   }
 
   /** Start routing a streaming envelope source `(topic, value)` — one
-    * `foreachBatch` that persists each micro-batch and multicasts it over
+    * `foreachBatch` that caches each parsed micro-batch and multicasts it over
     * the route branches. Batch N+1 is not fetched until N completes: that
     * barrier IS the backpressure (O12). */
   def start(

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge to `private[sql]` Column<->Expression conversions (Spark 4.x moved
   * them behind `org.apache.spark.sql.classic.ExpressionUtils`) and the one
-  * plan factory the produce path needs. Standard pattern for
+  * plan factory, shared by the route and produce paths. Standard pattern for
   * Catalyst-extension libraries: one tiny accessor object in the
   * `org.apache.spark.sql` package, nothing else lives here.
   */
@@ -22,7 +22,8 @@ object GraftShims {
   /** Plan factory: a DataFrame with `df`'s schema whose rows are
     * `reshape(df's executed rows)`, planned as one `LogicalRDD` leaf (the
     * `internalCreateDataFrame` path: a hand-built plan wrapped back into a
-    * Dataset). `reshape` may regroup partitions, not change rows. Building
+    * Dataset). `reshape` may cache or regroup partitions, not change rows
+    * (the router caches each parsed batch, the flush regroups). Building
     * the frame plans `df` but runs no job, except that an adaptive plan
     * with exchanges runs its shuffle stages here, so build it where a
     * failure of `df` is handled. */

@@ -402,15 +402,35 @@ class RouteRegistrySpec extends SparkSuite {
     assert(strict.emitter.getEmittedEvents.isEmpty)
   }
 
+  test("a routed batch is cached under one plan leaf: handlers see no CacheManager entry") {
+    import spark.implicits._
+    val cm = spark.sharedState.cacheManager
+    cm.clearCache()
+    val seen = mutable.Buffer.empty[Boolean]
+    val routes = oneJobRoutes :+ Route("t-a", None, (df, em) => {
+      seen += cm.isEmpty
+      reemit(9)(df, em)
+    })
+    val reg = registry(oneJobConfig(), routes)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    reg.process(mixed.toDF("topic", "value"))
+    assert(seen == Seq(true), "the routed batch registered a CacheManager entry")
+    assert(spark.sparkContext.getPersistentRDDs.size == before, "the batch's rows were not released")
+    assert(reg.emitter.getEmittedEvents == perRoute(reg, routes, mixed))
+  }
+
   /** A registry that writes to hosts (not `onlyTesting`) through a
     * recording sink: every write that succeeds is logged as
-    * `host -> (topic, value)` rows; a write to a host in `down` throws. */
+    * `host -> (topic, value)` rows; a write to a host in `down` throws.
+    * `onWrite` runs as each write starts. */
   private def hostRegistry(
       config: EngineConfig,
       routes: Seq[Route],
-      down: Set[String]): (RouteRegistry, mutable.Buffer[(String, Seq[(String, String)])]) = {
+      down: Set[String],
+      onWrite: () => Unit = () => ()): (RouteRegistry, mutable.Buffer[(String, Seq[(String, String)])]) = {
     val writes = mutable.Buffer.empty[(String, Seq[(String, String)])]
     val sink = (df: DataFrame, _: EngineConfig, host: String) => {
+      onWrite()
       if (down(host)) throw new RuntimeException(s"$host is down")
       val rows = df.select("topic", "value").collect().toSeq.map(r => (r.getString(0), r.getString(1)))
       writes.synchronized { writes += host -> rows }
@@ -475,6 +495,21 @@ class RouteRegistrySpec extends SparkSuite {
     reg.process(mixed.toDF("topic", "value"))
     val want = capturedRows(failing)
     assert(!want.exists(_._1 == "out-2"))
+    Seq("a:9092", "b:9092").foreach(h => assert(written(writes.toSeq, h).sorted == want.sorted, h))
+  }
+
+  test("a two-host flush writes both hosts without a CacheManager entry") {
+    import spark.implicits._
+    val cm = spark.sharedState.cacheManager
+    cm.clearCache()
+    val seen = mutable.Buffer.empty[Boolean]
+    val cfg = oneJobConfig().copy(host = "a:9092", additionalHosts = Seq("b:9092"))
+    val (reg, writes) = hostRegistry(cfg, frameRoutes, down = Set.empty, onWrite = () => seen += cm.isEmpty)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    reg.process(mixed.toDF("topic", "value"))
+    assert(seen == Seq(true, true), "a host write saw a CacheManager entry")
+    assert(spark.sparkContext.getPersistentRDDs.size == before, "the flush's rows were not released")
+    val want = capturedRows(frameRoutes)
     Seq("a:9092", "b:9092").foreach(h => assert(written(writes.toSeq, h).sorted == want.sorted, h))
   }
 }
